@@ -36,19 +36,7 @@ object BlockingEval {
     * for specs.
     */
   def evalOf(keyed: DataFrame): DataFrame = {
-    val ex = Dedup.explodeBlockKeys(keyed)
-    val heavy = ex
-      .groupBy(col("__block_kind").as("__heavy_kind"), col("__block_key").as("__heavy_key"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > Dedup.MaxBlockSize)
-      .drop("__n")
-    val capped = ex
-      .join(
-        broadcast(heavy),
-        col("__block_kind") === col("__heavy_kind") && col("__block_key") === col("__heavy_key"),
-        "left_anti"
-      )
-      .persist()
+    val capped = Dedup.capHeavy(Dedup.explodeBlockKeys(keyed)).persist()
 
     // Candidate counts from the bounded (kind, key, source) table.
     val perSrc = capped
@@ -77,11 +65,9 @@ object BlockingEval {
     // Matched pairs per kind: the production pair join + veto chain,
     // kind retained (each record carries ONE key per kind, so a pair
     // appears at most once per kind — no distinct needed).
-    val left = capped.columns.foldLeft(capped)((d, c) => d.withColumnRenamed(c, c + "_1"))
-    val right = capped.columns.foldLeft(capped)((d, c) => d.withColumnRenamed(c, c + "_2"))
-    val matches = left
+    val matches = Dedup.suffixed(capped, "_1")
       .join(
-        right,
+        Dedup.suffixed(capped, "_2"),
         col("__block_kind_1") === col("__block_kind_2") &&
           col("__block_key_1") === col("__block_key_2") &&
           col("source_id_1") =!= col("source_id_2") &&
@@ -145,22 +131,10 @@ object BlockingEval {
     * boolean agreement flag per field plus the veto-chain match label.
     */
   private def agreementFlags(keyed: DataFrame): DataFrame = {
-    val ex = Dedup.explodeBlockKeys(keyed)
-    val heavy = ex
-      .groupBy(col("__block_kind").as("__heavy_kind"), col("__block_key").as("__heavy_key"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > Dedup.MaxBlockSize)
-      .drop("__n")
-    val capped = ex.join(
-      broadcast(heavy),
-      col("__block_kind") === col("__heavy_kind") && col("__block_key") === col("__heavy_key"),
-      "left_anti"
-    )
-    val left = capped.columns.foldLeft(capped)((d, c) => d.withColumnRenamed(c, c + "_1"))
-    val right = capped.columns.foldLeft(capped)((d, c) => d.withColumnRenamed(c, c + "_2"))
-    left
+    val capped = Dedup.capHeavy(Dedup.explodeBlockKeys(keyed))
+    Dedup.suffixed(capped, "_1")
       .join(
-        right,
+        Dedup.suffixed(capped, "_2"),
         col("__block_kind_1") === col("__block_kind_2") &&
           col("__block_key_1") === col("__block_key_2") &&
           col("source_id_1") =!= col("source_id_2") &&

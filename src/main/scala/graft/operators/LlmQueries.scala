@@ -191,7 +191,7 @@ object LlmQueries {
     * clustering). Heavy buckets are rare by definition (at most
     * corpus/cap of them), so the map-side-combinable groupBy on the
     * narrow key produces a broadcastable frame — the same shape as
-    * [[Dedup.heavyKeys]].
+    * [[Dedup.capHeavy]].
     */
   def heavyBandBuckets(bandTable: DataFrame, cap: Int): DataFrame =
     bandTable

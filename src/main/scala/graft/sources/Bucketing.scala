@@ -23,8 +23,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` bucketed (+ sorted) by `keys` into `nBuckets` files per
-    * partition at `path`, registered as catalog table `table`.
+  /** Write `df` bucketed (+ sorted) by `keys` into `nBuckets` buckets at
+    * `path`, registered as catalog table `table`. Each write task writes
+    * one file per bucket it holds rows of, so a bucket is one file only
+    * when a single task writes it; a bucketed read still scans one bucket
+    * per task, whatever its file count.
     */
   def writeBucketed(
       df: DataFrame,

@@ -89,11 +89,16 @@ class BucketingSpec extends SparkSuite {
         .select("id", "dedup_id")
       // ...and the candidate-edge subplan over the stored table must plan
       // with NO shuffle exchange anywhere before the final pair distinct:
-      // both self-join sides and the heavy-key aggregate consume the
-      // stored (kind, key) bucketing.
+      // both self-join sides consume the stored (kind, key) bucketing, and
+      // the layout is stored already capped, so no heavy-key aggregate
+      // runs on the read side.
       val edges =
         Dedup.edgesFromExploded(Bucketing.readBucketed(spark, table), opaquePredicate = true)
       val physical = edges.queryExecution.executedPlan.toString
+      assert(
+        !physical.linesIterator.exists(l => l.contains("Aggregate") && l.contains("__block_")),
+        s"heavy-key aggregate on the read side:\n$physical"
+      )
       val exchanges = physical.linesIterator.count(l =>
         l.contains("Exchange") && !l.contains("BroadcastExchange")
       )
@@ -170,6 +175,14 @@ class BucketingSpec extends SparkSuite {
         l.contains("Exchange hashpartitioning") && l.contains("__block_")
       )
       assert(exchanges == 1, s"want exactly the delta-side key exchange, got $exchanges:\n$physical")
+      // The stored corpus is read once, as stored: the layout is capped at
+      // write time, so no per-call heavy-key aggregate re-scans it.
+      val corpusScans = physical.linesIterator.count(l => l.contains("Scan") && l.contains(table))
+      assert(corpusScans == 1, s"want one scan of $table, got $corpusScans:\n$physical")
+      assert(
+        !physical.linesIterator.exists(l => l.contains("Aggregate") && l.contains("__block_")),
+        s"aggregate over the blocking keys:\n$physical"
+      )
       // Identical output to the unbucketed incremental path.
       val got = bucketed.collect().map(_.toSeq).toSet
       val want = Dedup.dedupIncremental(batch, clustered).collect().map(_.toSeq).toSet
@@ -178,6 +191,38 @@ class BucketingSpec extends SparkSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql(s"DROP TABLE IF EXISTS $table")
       clustered.unpersist()
+      deleteRecursively(dir)
+    }
+  }
+
+  test("a freshly written dedup layout has one bucket per session shuffle partition") {
+    import spark.implicits._
+    val dir = "/tmp/graft_bucketed_count_" + System.nanoTime()
+    val records = Seq(
+      ("a.1", "a", "Some Title", "smith john", 1999, "0306406152"),
+      ("b.1", "b", "Some Title", "smith john", 1999, "")
+    ).toDF("id", "source_id", "title", "author", "year", "isbn")
+    val prevPartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    def numBuckets(table: String): Int =
+      spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
+        .find(_.getString(0) == "Num Buckets")
+        .map(_.getString(1).trim.toInt)
+        .getOrElse(fail(s"$table is not bucketed"))
+    try {
+      // A count no other spec uses, so the layout cannot come from a default.
+      spark.conf.set("spark.sql.shuffle.partitions", "3")
+      Dedup.dedupRecordsBucketed(records, "graft_bucket_count_recs", s"$dir/recs", refresh = true)
+      Dedup.dedupIncrementalBucketed(
+        records, records.withColumn("dedup_id", col("id")),
+        "graft_bucket_count_incr", s"$dir/incr", refresh = true
+      )
+      assert(numBuckets("graft_bucket_count_recs") == 3)
+      assert(numBuckets("graft_bucket_count_incr") == 3)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prevPartitions)
+      spark.sql("DROP TABLE IF EXISTS graft_bucket_count_recs")
+      spark.sql("DROP TABLE IF EXISTS graft_bucket_count_incr")
+      Lineage.releaseHeld()
       deleteRecursively(dir)
     }
   }

@@ -65,17 +65,50 @@ class DedupSpec extends SparkSuite {
   }
 
   test("oversized blocks are skipped (reference's candidate cap)") {
-    // 30 records share one title across two sources: with the cap lowered
-    // to 10 the block must produce no pairs at all.
-    val rows = (1 to 30).map { i =>
+    // One title block across two sources, one record over the cap: no
+    // path may pair inside it — not the full self-join, and not an
+    // incremental probe against it as the stored corpus, plain or
+    // bucketed. One record fewer and the same block pairs on every path.
+    def block(n: Int) = df((1 to n).map { i =>
       val src = if (i % 2 == 0) "a" else "b"
       (s"$src.$i", src, "Hot Placeholder Title", "smith john", Integer.valueOf(1999), "")
+    }: _*)
+    val probe = df(("c.1", "c", "Hot Placeholder Title", "smith john", 1999, ""))
+    val dir = "/tmp/graft_dedup_cap_" + System.nanoTime()
+    val table = "graft_dedup_cap_spec"
+    def matches(n: Int): (Long, Set[Option[String]], Set[Option[String]]) = {
+      val recs = block(n).persist()
+      val clustered = recs.withColumn("dedup_id", lit("a.2"))
+      val pairs = Dedup.dedupRecords(recs).filter(col("dedup_id").isNotNull).count()
+      def ids(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => Option(r.getAs[String]("dedup_id"))).toSet
+      val plain = ids(Dedup.dedupIncremental(probe, clustered))
+      val bucketed = ids(Dedup.dedupIncrementalBucketed(probe, clustered, table, dir, refresh = true))
+      recs.unpersist()
+      (pairs, plain, bucketed)
     }
-    val keyed = Dedup.withKeys(df(rows: _*))
-    val pairs = Dedup.candidatePairs(keyed, "title_key", maxBlockSize = 10)
-    assert(pairs.count() == 0)
-    // and with a generous cap the same block pairs up across sources
-    assert(Dedup.candidatePairs(keyed, "title_key", maxBlockSize = 100).count() > 0)
+    try {
+      assert(matches(Dedup.MaxBlockSize + 1) == ((0L, Set(None), Set(None))))
+      assert(matches(Dedup.MaxBlockSize) == ((Dedup.MaxBlockSize.toLong, Set(Some("a.2")), Set(Some("a.2")))))
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete(): Unit
+      }
+      rm(new java.io.File(dir))
+    }
+  }
+
+  test("withKeys over keyed input recomputes the key in place") {
+    val records = df(("a.1", "a", "Some Title", "smith john", 1999, ""))
+    val stale = records.withColumn("title_key", lit("stale"))
+    val keyed = Dedup.withKeys(stale)
+    assert(keyed.columns.count(_ == "title_key") == 1)
+    assert(keyed.columns.indexOf("title_key") == stale.columns.indexOf("title_key"))
+    val want = Dedup.withKeys(records).select("title_key").head().getString(0)
+    assert(want != "stale" && want.nonEmpty)
+    assert(keyed.select("title_key").head().getString(0) == want)
   }
 
   test("retraction dissolves groups below two members, keeps larger groups as-is") {
