@@ -67,7 +67,7 @@ object Bench {
               false
           }
         spark.catalog.clearCache() // drop per-query persisted datasets
-        graft.Lineage.releaseHeld() // and any localCheckpoint blocks
+        graft.Lineage.releaseHeld() // and every checkpoint still held
         // A failed query must not read as a (fast) success: report -1.
         q.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }

@@ -336,7 +336,7 @@ object ScaleProbe {
       case "bpe" =>
         // Full BPE training-loop probe: `mult` IS the merge count K here.
         // Per-merge cost must be flat in K (total time linear): without
-        // the localCheckpoint discipline in Bpe.train, iteration k
+        // the checkpoint discipline in Bpe.train, iteration k
         // re-executes all k−1 prior merge folds, so doubling K would
         // ~quadruple the time. Sweep K = 48 / 96 / 192 and compare.
         // The synthetic corpus's own vocabulary is ~30 words (too small
@@ -345,23 +345,24 @@ object ScaleProbe {
         // per document — real fold work every iteration, and enough
         // pair diversity that merges never exhaust below K=192.
         val k = math.max(mult, 8)
-        val vocab = Tables
-          .documents(spark, sfDir)
-          .select(explode(sequence(lit(0), lit(19))).as("i"), col("doc_id"))
-          .select(
-            substring(
-              md5(concat(col("doc_id").cast("string"), lit(":"), col("i").cast("string"))),
-              1,
-              8
-            ).as("w")
-          )
-          .groupBy("w")
-          .agg(count(lit(1)).as("f"))
-          .withColumn(
-            "syms",
-            transform(sequence(lit(1), length(col("w"))), i => col("w").substr(i, lit(1)))
-          )
-          .localCheckpoint(true)
+        val vocab = graft.Lineage.checkpoint(
+          Tables
+            .documents(spark, sfDir)
+            .select(explode(sequence(lit(0), lit(19))).as("i"), col("doc_id"))
+            .select(
+              substring(
+                md5(concat(col("doc_id").cast("string"), lit(":"), col("i").cast("string"))),
+                1,
+                8
+              ).as("w")
+            )
+            .groupBy("w")
+            .agg(count(lit(1)).as("f"))
+            .withColumn(
+              "syms",
+              transform(sequence(lit(1), length(col("w"))), i => col("w").substr(i, lit(1)))
+            )
+        ).df
         val nWords = vocab.count()
         val t0 = System.nanoTime()
         val merges = operators.Bpe.train(vocab, k)

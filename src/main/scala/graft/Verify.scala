@@ -31,8 +31,8 @@ object Verify {
       }
       // queries persist intermediates (dedup keys, LSH band tables);
       // release them so 60 queries don't accumulate cached blocks.
-      // releaseHeld frees localCheckpoint BLOCKS too — clearCache
-      // cannot (they live outside the CacheManager).
+      // releaseHeld frees checkpoint storage too — clearCache cannot
+      // (it lives outside the CacheManager).
       spark.catalog.clearCache()
       graft.Lineage.releaseHeld()
     }

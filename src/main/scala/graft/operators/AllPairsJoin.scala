@@ -55,11 +55,11 @@ object AllPairsJoin {
     * metric).
     */
   def allPairsOfSets(wsets0: DataFrame): DataFrame = {
-    // localCheckpoint, not persist: three branches of the ONE returned
-    // plan read the set frame, so a synchronous unpersist can't exist;
-    // checkpoint blocks are context-cleaner-released when the frame is
-    // unreferenced instead of pinning cache entries across a sweep.
-    val wsets = wsets0.localCheckpoint()
+    // Checkpoint, not persist: three branches of the ONE returned plan
+    // read the set frame, so the operator cannot release it itself; the
+    // consumer's Lineage.releaseHeld() frees it after the action instead
+    // of cache entries pinning blocks across a sweep.
+    val wsets = graft.Lineage.checkpoint(wsets0).df
     val toks = wsets.select(col("doc_id"), explode(col("ws")).as("token"))
     val tf = toks.groupBy("token").agg(count(lit(1)).as("f"))
     // Per-document prefix: sort the doc's OWN tokens by (global freq,

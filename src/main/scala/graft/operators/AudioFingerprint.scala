@@ -208,7 +208,7 @@ object AudioFingerprint {
     // the plan blows PlanSpec's expression-node cap and the decode
     // would genuinely run once per reference. The checkpoint runs the
     // decode exactly once; blocks release via Lineage.releaseHeld.
-    val pb = graft.Lineage.hold(perBin.localCheckpoint(), "AudioFingerprint.windowTable")
+    val pb = graft.Lineage.checkpoint(perBin).df
     pb
       .withColumn("e", expr("xre * xre + xim * xim"))
       .groupBy("media_id", "nw", "t")
@@ -267,7 +267,7 @@ object AudioFingerprint {
     // checkpoint once so the sample decode + DFT never replays per
     // branch (released via Lineage.releaseHeld, the nearDupOf
     // convention).
-    val lm = graft.Lineage.hold(landmarks.localCheckpoint(), "AudioFingerprint.nearDupOf")
+    val lm = graft.Lineage.checkpoint(landmarks).df
     val heavy = lm
       .groupBy("v")
       .agg(count(lit(1)).as("n"))
@@ -348,7 +348,7 @@ object AudioFingerprint {
   }
 
   def neardupIndexOf(corpusLandmarks: DataFrame): AudioNeardupIndex = {
-    val lm = graft.Lineage.hold(corpusLandmarks.localCheckpoint(), "AudioFingerprint.neardupIndexOf")
+    val lm = graft.Lineage.checkpoint(corpusLandmarks).df
     val heavy = lm
       .groupBy("v")
       .agg(count(lit(1)).as("n"))
@@ -366,7 +366,7 @@ object AudioFingerprint {
     * Returns (media_id, matched_media, is_new) per batch clip.
     */
   def nearDupIncrementalIndexed(batchLandmarks: DataFrame, index: AudioNeardupIndex): DataFrame = {
-    val bl = graft.Lineage.hold(batchLandmarks.localCheckpoint(), "AudioFingerprint.nearDupIncremental")
+    val bl = graft.Lineage.checkpoint(batchLandmarks).df
     val matched = bl
       .select(col("v"), col("media_id"), col("n_windows").as("nw_b"), col("t").as("t_b"))
       .join(

@@ -86,18 +86,16 @@ object Bpe {
     * `pairCounts(v)` action re-executes all k−1 prior merge folds from
     * the base vocab — O(K²) total work and a K-deep Catalyst plan. So
     * every `checkpointEvery` merges the vocab frame is eagerly
-    * `localCheckpoint`ed (materialized symbols, lineage cut) and the
-    * PREVIOUS checkpoint's blocks are released, keeping at most one
+    * checkpointed (materialized symbols, lineage cut) and the
+    * PREVIOUS checkpoint is released, keeping at most one
     * vocab-sized copy resident and per-merge cost flat in K (ScaleProbe
     * `bpe` mode certifies the flat curve at K=192).
     */
   def train(vocab: DataFrame, k: Int, checkpointEvery: Int = 10): Seq[(String, String)] = {
     var v = vocab
-    // The RDD backing the live checkpoint, so its blocks can be freed
-    // once the next eager checkpoint has materialized past it.
-    // (Dataset.unpersist only clears cacheManager entries, not
-    // localCheckpoint blocks — the RDD handle is the real release.)
-    var ckptRdd: Option[org.apache.spark.rdd.RDD[_]] = None
+    // The live checkpoint, released once the next eager checkpoint has
+    // materialized past it.
+    var ckpt: Option[graft.Checkpointed] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     for (_ <- 1 to k if !done) {
@@ -111,19 +109,16 @@ object Bpe {
         merges += ((a, b))
         v = v.withColumn("syms", mergePair(col("syms"), lit(a), lit(b)))
         if (merges.size % checkpointEvery == 0) {
-          // CAVEAT (real cluster): eager localCheckpoint + releasing the
-          // previous block means lost executor blocks CANNOT be
-          // recomputed (lineage is cut). On a deployment with a
-          // configured checkpoint dir, reliable `checkpoint()` is the
-          // fault-tolerant variant of this same discipline.
-          val ck = v.localCheckpoint(true)
-          ckptRdd.foreach(_.unpersist(blocking = false))
-          ckptRdd = graft.Lineage.checkpointRdd(ck, "Bpe")
-          v = ck
+          // (Lineage cut: see graft.Lineage for the executor-loss
+          // caveat and the reliable mode.)
+          val ck = graft.Lineage.checkpoint(v)
+          ckpt.foreach(_.release())
+          ckpt = Some(ck)
+          v = ck.df
         }
       }
     }
-    ckptRdd.foreach(_.unpersist(blocking = false))
+    ckpt.foreach(_.release())
     merges.toSeq
   }
 

@@ -429,15 +429,16 @@ object CalibrationQueries {
     "dedup_lsh_plan",
     (s, d) => {
       val sub = LlmQueries.corpus(s, d).filter(col("doc_id") % 4 === 1)
-      val exact = AllPairsJoin
-        .allPairsOfSets(
-          sub.select(
-            col("doc_id"),
-            array_distinct(TextFunctions.shingles(col("text"))).as("ws")
+      val exact = graft.Lineage.checkpoint(
+        AllPairsJoin
+          .allPairsOfSets(
+            sub.select(
+              col("doc_id"),
+              array_distinct(TextFunctions.shingles(col("text"))).as("ws")
+            )
           )
-        )
-        .select("jac_pm")
-        .localCheckpoint()
+          .select("jac_pm")
+      ).df
       PlanGrid
         .map { case (b, r) =>
           exact
@@ -511,15 +512,16 @@ object CalibrationQueries {
     "dedup_threshold_sweep",
     (s, d) => {
       val sub = LlmQueries.corpus(s, d).filter(col("doc_id") % 4 === 1)
-      val exact = AllPairsJoin
-        .allPairsOfSets(
-          sub.select(
-            col("doc_id"),
-            array_distinct(TextFunctions.shingles(col("text"))).as("ws")
+      val exact = graft.Lineage.checkpoint(
+        AllPairsJoin
+          .allPairsOfSets(
+            sub.select(
+              col("doc_id"),
+              array_distinct(TextFunctions.shingles(col("text"))).as("ws")
+            )
           )
-        )
-        .select("doc_a", "doc_b", "jac_pm")
-        .localCheckpoint()
+          .select("doc_a", "doc_b", "jac_pm")
+      ).df
       val taued = exact
         .select(
           explode(typedLit(ThresholdGrid.map(_.toLong))).as("tau_pm"),

@@ -91,27 +91,23 @@ object ConnectedComponents {
   def connectedComponents(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
     // Each round references the previous edge set 4+ times (symmetrize,
     // min-join, re-join), so a lazy/persisted loop grows the LOGICAL
-    // plan 4^rounds even though the data is cached — eager
-    // localCheckpoint cuts the lineage to a LogicalRDD per round (the
-    // Bpe.train discipline, incl. the previous round's block release
-    // and its real-cluster caveat: with lineage cut, lost executor
-    // blocks cannot be recomputed; deployments with a checkpoint dir
-    // should swap in reliable checkpoint()).
-    def rddOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      graft.Lineage.checkpointRdd(df, "ConnectedComponents")
+    // plan 4^rounds even though the data is cached — an eager
+    // checkpoint cuts the lineage to a LogicalRDD per round (the
+    // Bpe.train discipline, incl. the previous round's release and the
+    // executor-loss caveat documented on graft.Lineage).
     // Seed orientation (greatest, least) matches smallStar's output form
     // (every emitted edge has a > b), so an already-contracted input's
     // round-1 checksum can equal the seed checksum and converge in ONE
     // round — the common star/pair shape neardupComponents feeds in.
-    var cur = edges
-      .filter(col("a") =!= col("b"))
-      .select(
-        greatest(col("a"), col("b")).as("a"),
-        least(col("a"), col("b")).as("b")
-      )
-      .distinct()
-      .localCheckpoint(true)
-    var curRdd = rddOf(cur)
+    var cur = graft.Lineage.checkpoint(
+      edges
+        .filter(col("a") =!= col("b"))
+        .select(
+          greatest(col("a"), col("b")).as("a"),
+          least(col("a"), col("b")).as("b")
+        )
+        .distinct()
+    )
     // (count, hash-sum) checksum over the materialized round: one cheap
     // action decides convergence. hash() is Spark-deterministic; long
     // sums are partition-order independent.
@@ -124,17 +120,15 @@ object ConnectedComponents {
         .head()
       (r.getLong(0), r.getLong(1))
     }
-    var prev = checksum(cur)
+    var prev = checksum(cur.df)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
       round += 1
-      val next = smallStar(largeStar(cur)).localCheckpoint(true)
-      val nextRdd = rddOf(next)
-      val chk = checksum(next)
-      curRdd.foreach(_.unpersist(blocking = false))
+      val next = graft.Lineage.checkpoint(smallStar(largeStar(cur.df)))
+      val chk = checksum(next.df)
+      cur.release()
       cur = next
-      curRdd = nextRdd
       converged = chk == prev
       prev = chk
     }
@@ -150,9 +144,9 @@ object ConnectedComponents {
     // the aggregate the output would break the one-row-per-id contract
     // downstream left joins rely on (labels would fan out instead of
     // merely being non-minimal, which is how assignClusters degrades).
-    cur
+    cur.df
       .select(col("a").as("id"), col("b").as("component_id"))
-      .union(cur.select(col("b").as("id"), col("b").as("component_id")))
+      .union(cur.df.select(col("b").as("id"), col("b").as("component_id")))
       .groupBy("id")
       .agg(min(col("component_id")).as("component_id"))
   }

@@ -321,7 +321,7 @@ object CurationQueries {
     * for the `stridedspans` probe and specs.
     */
   def stridedSpansOf(corpus: DataFrame): DataFrame = {
-    // localCheckpoint the anchor frame ONCE (the Bpe.train discipline):
+    // Checkpoint the anchor frame ONCE (the Bpe.train discipline):
     // the winnow kernel (an md5 per gram position over the whole
     // corpus) is the pipeline's dominant cost, and both the
     // duplicated-gram census and the position side below read it.
@@ -338,8 +338,8 @@ object CurationQueries {
     // and the fact-to-unique-dimension join back is AQE-skew-splittable
     // (and broadcast when the dup-gram dimension is small).
     // PlanSpec's corpus-window guard pins this shape.
-    // Held for deferred release: the blocks outlive clearCache, so the
-    // consumer frees them via Lineage.releaseHeld() after its action.
+    // The checkpoint outlives clearCache; the consumer frees it via
+    // Lineage.releaseHeld() after its action.
     // The winnow kernel (an md5 per gram position) is a heavy per-row
     // kernel directly on the scan, and the corpus union's branches are
     // size-skewed (the full-docs branch is 10× its siblings) — fan out
@@ -357,13 +357,10 @@ object CurationQueries {
     // RoundTenOpsSpec pins digest-vs-string census equality; the DuckDB
     // oracle (exact strings) certifies the output every sweep.
     val anchors =
-      graft.Lineage.hold(
-        graft.Checkpoint.of(
-          anchorsOf(graft.Tables.fanOutForCpu(corpus))
-            .select(col("doc_id"), col("pos"), unhex(md5(col("g"))).as("g"))
-        ),
-        "CurationQueries.stridedSpansOf"
-      )
+      graft.Lineage.checkpoint(
+        anchorsOf(graft.Tables.fanOutForCpu(corpus))
+          .select(col("doc_id"), col("pos"), unhex(md5(col("g"))).as("g"))
+      ).df
     val dup = anchors
       .groupBy("g")
       .agg(count(lit(1)).as("c"))

@@ -315,16 +315,16 @@ object Dedup {
     // re-derived the whole candidate-join + match-predicate lineage
     // (measured: 33 s of duplicated task time at sf0.1 on dedup_records
     // alone; eager checkpoint cuts the pipeline's task time 47 → 6.6 s,
-    // wall 5.4 → 3.9 s). The eager localCheckpoint also truncates the
+    // wall 5.4 → 3.9 s). The eager checkpoint also truncates the
     // lineage so each propagation round re-reads edge BLOCKS, never the
-    // join plan. Blocks are released at function exit (labels is itself
+    // join plan. Released at function exit (labels is itself
     // checkpoint-backed by then, so nothing downstream re-reads sym).
-    val sym = graft.Checkpoint.of(
+    val symCk = graft.Lineage.checkpoint(
       edges
         .select(col("id_1").as("id"), col("id_2").as("peer"))
         .union(edges.select(col("id_2").as("id"), col("id_1").as("peer")))
     )
-    val symRdd = graft.Lineage.checkpointRdd(sym, "Dedup.assignClusters.sym")
+    val sym = symCk.df
     // The decrease flag rides along INSIDE the propagation projection, so
     // ONE action per round both materializes the new labels and decides
     // convergence — no separate checksum scan. Labels only ever decrease,
@@ -335,7 +335,7 @@ object Dedup {
     // id join), so a persist-only loop doubles the LOGICAL plan per round
     // — fine at dedup's diameter ≤ 2-3, but a diameter-d graph grows a
     // 2^d-node plan whose SQL-event description alone OOMs the driver.
-    // Lazy `localCheckpoint` truncates the plan to a LogicalRDD per round
+    // A lazy checkpoint truncates the plan to a LogicalRDD per round
     // while the convergence count stays the single materializing action
     // (the Bpe.train / ConnectedComponents discipline, incl. the
     // executor-loss caveat documented on graft.Lineage).
@@ -347,36 +347,34 @@ object Dedup {
         least(col("min_peer"), col("id")).as("dedup_id"),
         lit(true).as("__decreased")
       )
-    var labels = graft.Checkpoint.of(labels0, eager = false)
-    var labelsRdd = graft.Lineage.checkpointRdd(labels, "Dedup.assignClusters")
+    var labels = graft.Lineage.checkpoint(labels0, eager = false)
     var converged = false
     for (_ <- 1 to iters if !converged) {
       val next0 = sym
         .join(
-          labels
+          labels.df
             .select(col("id").as("peer"), col("dedup_id").as("peer_label")),
           Seq("peer")
         )
         .groupBy("id")
         .agg(min(col("peer_label")).as("peer_min"))
-        .join(labels.select("id", "dedup_id"), Seq("id"))
+        .join(labels.df.select("id", "dedup_id"), Seq("id"))
         .select(
           col("id"),
           least(col("peer_min"), col("dedup_id")).as("dedup_id"),
           (col("peer_min") < col("dedup_id")).as("__decreased")
         )
-      val next = graft.Checkpoint.of(next0, eager = false)
-      val nextRdd = graft.Lineage.checkpointRdd(next, "Dedup.assignClusters")
-      val nDecreased = next.filter(col("__decreased")).count()
-      labelsRdd.foreach(_.unpersist(blocking = false))
+      val next = graft.Lineage.checkpoint(next0, eager = false)
+      val nDecreased = next.df.filter(col("__decreased")).count()
+      labels.release()
       labels = next
-      labelsRdd = nextRdd
       converged = nDecreased == 0
     }
-    // The returned frame is checkpoint-backed (LogicalRDD), so the edge
-    // checkpoint blocks can be released here instead of leaking until GC.
-    symRdd.foreach(_.unpersist(blocking = false))
-    labels.drop("__decreased")
+    // The returned frame reads the last label checkpoint, so the edge
+    // checkpoint can go now; the label checkpoint stays registered until
+    // the consumer's Lineage.releaseHeld().
+    symCk.release()
+    labels.df.drop("__decreased")
   }
 
   /** Incremental mode (the reference's per-record dedupRecord loop over
@@ -409,10 +407,13 @@ object Dedup {
     * table) when `clustered` changes. The stored layout holds the capped
     * frame, so a table written by an earlier version (uncapped, capped on
     * every read) must be rewritten with `refresh = true` as well.
+    *
+    * `clustered` is by-name: it is evaluated only when the layout is
+    * written, so a call against an existing table never builds it.
     */
   def dedupIncrementalBucketed(
       batch: DataFrame,
-      clustered: DataFrame,
+      clustered: => DataFrame,
       table: String,
       path: String,
       refresh: Boolean = false
@@ -539,15 +540,12 @@ object Dedup {
     // re-reading the parquet and re-running the normalization
     // expressions — the same replay class r13 fixed for sym itself).
     // One materialization job; consumers read blocks; released per
-    // query via Lineage.releaseHeld.
+    // query by the consumer's Lineage.releaseHeld.
     // (A fan-out of `records` to the session cores was measured here in
     // round 13 and REVERTED: unlike the ingest/knn/winnow kernels, the
     // added exchange + wider stages did not pay for themselves —
     // dedup_records benched 4.3 s without vs 5.2 s with.)
-    val keyed = graft.Lineage.hold(
-      graft.Checkpoint.of(withKeys(records, folding)),
-      "Dedup.dedupRecords.keyed"
-    )
+    val keyed = graft.Lineage.checkpoint(withKeys(records, folding)).df
     val clusters = assignClusters(matchedEdges(keyed), iters)
     keyed
       .select("id")

@@ -337,19 +337,15 @@ object DedupQueries {
       // bucketed by (kind, key) at the session's shuffle partitions; each
       // call reads that layout once, as stored, and only the delta
       // shuffles to match. Identical output to dedup_incremental, same
-      // oracle. `clustered` feeds only the layout write, which runs once,
-      // so it is not persisted.
+      // oracle. `clustered` is passed by name and feeds only the layout
+      // write, so the corpus is clustered only when the layout is written.
       "dedup_incremental_bucketed",
       (s, d) => {
         val recs = records(s, d)
-        val clustered = Dedup
-          .dedupRecords(recs)
-          .filter(col("dedup_id").isNotNull)
-          .join(recs, Seq("id"))
         val tag = d.replaceAll("[^A-Za-z0-9]", "_")
         Dedup.dedupIncrementalBucketed(
           batchRecords(s, d),
-          clustered,
+          Dedup.dedupRecords(recs).filter(col("dedup_id").isNotNull).join(recs, Seq("id")),
           table = s"graft_dedup_corpus$tag",
           path = s"/tmp/graft_bucketed$tag/dedup_corpus"
         )

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Lineage, Q}
+import graft.{Checkpointed, Lineage, Q}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,13 +46,12 @@ object GraphMetrics {
 
   /** One-row transitivity summary of an undirected edge list. */
   def transitivityOf(edges0: DataFrame): DataFrame = {
-    // localCheckpoint, not persist: the canonical edge set is read by
-    // three branches of ONE returned plan, so a synchronous unpersist
-    // is impossible — checkpoint blocks are released by the context
-    // cleaner once the frame is unreferenced, keeping a full registry
-    // sweep's footprint bounded (persist entries would pin blocks in
-    // the CacheManager until an explicit clearCache).
-    val edges = graft.Checkpoint.of(canonical(edges0))
+    // Checkpoint, not persist: the canonical edge set is read by three
+    // branches of ONE returned plan, so the operator cannot release it
+    // itself; the consumer's Lineage.releaseHeld() does, after the
+    // action (persist entries would pin blocks in the CacheManager until
+    // an explicit clearCache).
+    val edges = Lineage.checkpoint(canonical(edges0)).df
     val deg = edges
       .select(col("u").as("id"))
       .unionByName(edges.select(col("v").as("id")))
@@ -100,7 +99,7 @@ object GraphMetrics {
     * next round materializes past them.
     */
   def kcoreOf(edges0: DataFrame, k: Int = CoreK, rounds: Int = PeelRounds): DataFrame = {
-    val edges = graft.Checkpoint.of(canonical(edges0))
+    val edges = Lineage.checkpoint(canonical(edges0)).df
     // One-row (vertex count, degree sum) summary, collected DRIVER-side
     // per round (the Bpe.train argmax-collect discipline): peeling is
     // monotone, so summary equality means the degree table is at its
@@ -119,7 +118,7 @@ object GraphMetrics {
       .groupBy("id")
       .agg(count(lit(1)).as("dg"))
     var prevSummary = summaryOf(deg)
-    var kept: Option[org.apache.spark.rdd.RDD[_]] = None
+    var kept: Option[Checkpointed] = None
     var stable = -1
     var r = 1
     while (r <= rounds && stable < 0) {
@@ -129,10 +128,10 @@ object GraphMetrics {
         .join(alive.select(col("id").as("v")), Seq("v"), "left_semi")
       // LAZY checkpoint (round-14, guide §1.2 action batching): the
       // summary collect below is the round's single materializing
-      // action — the old eager localCheckpoint ran a SEPARATE job per
+      // action — the old eager checkpoint ran a SEPARATE job per
       // round before the collect, i.e. 2 sequential job turnarounds per
       // peel round where 1 suffices (the assignClusters discipline).
-      val next = graft.Checkpoint.of(
+      val next = Lineage.checkpoint(
         e2
           .select(col("u").as("id"))
           .unionByName(e2.select(col("v").as("id")))
@@ -140,13 +139,12 @@ object GraphMetrics {
           .agg(count(lit(1)).as("dg")),
         eager = false
       )
-      val sm = summaryOf(next)
+      val sm = summaryOf(next.df)
       if (sm == prevSummary) stable = r
       prevSummary = sm
-      val prev = kept
-      kept = Lineage.checkpointRdd(next, "kcore")
-      deg = next
-      prev.foreach(_.unpersist(false))
+      kept.foreach(_.release())
+      kept = Some(next)
+      deg = next.df
       r += 1
     }
     val roundsUsed = if (stable > 0) stable.toLong else rounds.toLong
@@ -222,7 +220,7 @@ object GraphMetrics {
     * (both engines truncate integer division toward zero — probed).
     */
   def modularityOf(edges0: DataFrame, labels: DataFrame): DataFrame = {
-    val edges = graft.Checkpoint.of(canonical(edges0))
+    val edges = Lineage.checkpoint(canonical(edges0)).df
     val lab = labels.select(col("doc_id"), col("cluster_id"))
     val tagged = edges
       .join(lab.select(col("doc_id").as("u"), col("cluster_id").as("cu")), Seq("u"))

@@ -271,13 +271,12 @@ object ImageFeatures {
     */
   def nearDupOf(hashes: DataFrame, release: Seq[DataFrame] = Nil): DataFrame = {
     // The hash table is 16 bytes/image and feeds the census plus both
-    // join sides — localCheckpoint it once (the Bpe.train discipline)
-    // so the decode pipeline behind it never replays per branch and
-    // the banding plan is a scan, not four copies of the byte fold.
-    // The handle is registered with Lineage.hold: localCheckpoint
-    // blocks outlive unpersist/clearCache, so the consumer frees them
+    // join sides — checkpoint it once (the Bpe.train discipline) so the
+    // decode pipeline behind it never replays per branch and the
+    // banding plan is a scan, not four copies of the byte fold. The
+    // checkpoint outlives unpersist/clearCache, so the consumer frees it
     // via Lineage.releaseHeld() after its action (Verify/Bench do).
-    val hs = graft.Lineage.hold(hashes.localCheckpoint(), "ImageFeatures.nearDupOf")
+    val hs = graft.Lineage.checkpoint(hashes).df
     release.foreach(_.unpersist())
     val banded = hashBands(hs)
     // Heavy-bucket cap through the minhashPairsOf idiom (bounded census
@@ -347,8 +346,8 @@ object ImageFeatures {
     * own identity. Returns (media_id, matched_media, is_new).
     */
   def nearDupIncrementalOf(batchHashes: DataFrame, corpusHashes: DataFrame): DataFrame = {
-    val bh = graft.Lineage.hold(batchHashes.localCheckpoint(), "ImageFeatures.nearDupIncremental")
-    val ch = graft.Lineage.hold(corpusHashes.localCheckpoint(), "ImageFeatures.nearDupIncremental")
+    val bh = graft.Lineage.checkpoint(batchHashes).df
+    val ch = graft.Lineage.checkpoint(corpusHashes).df
     val corpusBands = hashBands(ch)
     val heavy = corpusBands
       .groupBy("b", "v")

@@ -144,15 +144,15 @@ object LlmQueries {
   val MaxBucketSize = 1000
 
   /** Exploded (doc_id, band_id, band_hash) LSH band table. With
-    * `persist = true` (default) it is EAGERLY checkpointed and held via
-    * [[graft.Lineage.hold]] — it feeds both self-join sides plus the
-    * heavy-bucket count, so it is computed once, and the checkpoint JOB
-    * RUNS INSIDE THIS CALL (not lazily at the caller's first action).
+    * `persist = true` (default) it is EAGERLY checkpointed through
+    * [[graft.Lineage.checkpoint]] — it feeds both self-join sides plus
+    * the heavy-bucket count, so it is computed once, and the checkpoint
+    * JOB RUNS INSIDE THIS CALL (not lazily at the caller's first action).
     * Release contract: `spark.catalog.clearCache()` does NOT free
-    * checkpoint blocks — the consumer must call
+    * checkpoint storage — the consumer must call
     * `graft.Lineage.releaseHeld()` after its action (Verify/Bench/
     * Profile do, per query); long-lived callers outside that loop (e.g.
-    * the incremental corpus side) hold blocks until someone releases.
+    * the incremental corpus side) hold it until someone releases.
     * Pass `persist = false` for single-use band tables (e.g. the delta
     * side of incremental matching inside a long-running stream, where a
     * per-batch checkpoint would leak blocks).
@@ -182,7 +182,7 @@ object LlmQueries {
     // read blocks. Released via Lineage.releaseHeld (Verify/Bench per
     // query), same contract as the other checkpointing operators.
     if (persist)
-      graft.Lineage.hold(graft.Checkpoint.of(bands), "LlmQueries.bandTableOf")
+      graft.Lineage.checkpoint(bands).df
     else bands
   }
 
@@ -226,13 +226,11 @@ object LlmQueries {
     )
     // Eager checkpoint for the same reason as [[bandTableOf]]: census +
     // two join sides would otherwise each replay the signature pass.
-    val pt = graft.Lineage.hold(
+    val pt = graft.Lineage.checkpoint(
       sig
         .select(col("doc_id"), explode(lshProbeBands(col("sig"), Bands, Rows)).as("e"))
         .select(col("doc_id"), col("e.band_id"), col("e.drop_pos"), col("e.p_hash"))
-        .transform(graft.Checkpoint.of(_)),
-      "LlmQueries.minhashProbePairsOf"
-    )
+    ).df
     val heavy = pt
       .groupBy("band_id", "drop_pos", "p_hash")
       .agg(count(lit(1)).as("__n"))

@@ -46,13 +46,9 @@ object LlmQueries6 {
     // normalize+segment+md5 pass twice (measured as two full-corpus
     // single-task stages in the round-13 profile). Blocks released by
     // the consumer via Lineage.releaseHeld.
-    val segs = graft.Lineage.hold(
-      graft.Checkpoint.of(
-        docs
-          .select(col("doc_id"), explode(col("seg_hashes")).as("seg_hash"))
-      ),
-      "LlmQueries6.segmentStatsOf.segs"
-    )
+    val segs = graft.Lineage.checkpoint(
+      docs.select(col("doc_id"), explode(col("seg_hashes")).as("seg_hash"))
+    ).df
     val counts = segs
       .groupBy("seg_hash")
       .agg(countDistinct(col("doc_id")).as("n_docs"))

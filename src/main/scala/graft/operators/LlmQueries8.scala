@@ -190,13 +190,9 @@ object LlmQueries8 {
     * consumer via Lineage (Verify/Bench call releaseHeld per query).
     */
   private def wordSetsOf(docs: DataFrame): DataFrame =
-    graft.Lineage.hold(
-      graft.Checkpoint.of(
-        docs
-          .select(col("doc_id"), array_distinct(TextFunctions.words(col("text"))).as("wset"))
-      ),
-      "LlmQueries8.wordSetsOf"
-    )
+    graft.Lineage.checkpoint(
+      docs.select(col("doc_id"), array_distinct(TextFunctions.words(col("text"))).as("wset"))
+    ).df
 
   private def edgesFromBandTable(
       bandTable: DataFrame,

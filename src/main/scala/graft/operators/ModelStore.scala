@@ -119,7 +119,7 @@ object ModelStore {
   }
 
   private def unigramStored(s: SparkSession, d: String): DataFrame = {
-    val wf = UnigramLm.wordsOf(Tables.documents(s, d)).localCheckpoint()
+    val wf = graft.Lineage.checkpoint(UnigramLm.wordsOf(Tables.documents(s, d))).df
     val path = s"${modelDir(d)}/unigram_vocab"
     UnigramLm.vocabOfWf(wf).select("piece", "lp_mu").write.mode("overwrite").parquet(path)
     UnigramLm.viterbiWithVocab(wf, s.read.parquet(path))

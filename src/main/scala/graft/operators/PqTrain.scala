@@ -74,15 +74,12 @@ object PqTrain {
     var seeds = sub
       .filter(col("vec_id") < Kc)
       .select(col("m"), col("vec_id").as("cell"), col("sv").as("cv"))
-    var stats: DataFrame = null
-    var ckpt: Option[org.apache.spark.rdd.RDD[_]] = None
+    var stats: graft.Checkpointed = null
     for (_ <- 1 to Iters) {
       // The 1,024-row statistics table is the only state carried between
       // rounds — checkpoint it (Bpe.train discipline), never the corpus.
-      stats = assignStep(sub, seeds).localCheckpoint()
-      val prev = ckpt
-      ckpt = graft.Lineage.checkpointRdd(stats, "PqTrain")
-      seeds = stats
+      val next = graft.Lineage.checkpoint(assignStep(sub, seeds))
+      seeds = next.df
         .groupBy("m", "cell")
         .agg(
           transform(
@@ -92,10 +89,11 @@ object PqTrain {
             _.getField("v")
           ).as("cv")
         )
-      prev.foreach(_.unpersist(false))
+      Option(stats).foreach(_.release())
+      stats = next
     }
     (
-      stats.select(
+      stats.df.select(
         col("m").cast("long").as("sub"),
         col("cell").cast("long").as("code"),
         col("dim"),

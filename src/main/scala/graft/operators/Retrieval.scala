@@ -175,14 +175,11 @@ object Retrieval {
     val tfCols = allTerms.zipWithIndex.map { case (t, i) =>
       size(filter(col("ws"), w => w === t)).cast("long").as(s"tf_$i")
     }
-    val perDoc = graft.Lineage.hold(
-      graft.Checkpoint.of(
-        documents
-          .select(col("doc_id"), tokens.as("ws"))
-          .select(col("doc_id") +: size(col("ws")).cast("long").as("dl") +: tfCols: _*)
-      ),
-      "Retrieval.bm25ScoredOf.perDoc"
-    )
+    val perDoc = graft.Lineage.checkpoint(
+      documents
+        .select(col("doc_id"), tokens.as("ws"))
+        .select(col("doc_id") +: size(col("ws")).cast("long").as("dl") +: tfCols: _*)
+    ).df
     val dfAggs = sum("dl").as("sumdl") +:
       allTerms.indices.map(i => sum(when(col(s"tf_$i") > 0, 1L).otherwise(0L)).as(s"df_$i"))
     val stats = perDoc.agg(count(lit(1)).as("n"), dfAggs: _*)

@@ -178,20 +178,21 @@ object SequenceQueries {
       .groupBy("user_id")
       .agg(max("day").as("lastday"), count(lit(1)).as("f"), sum("v_c").as("m_c"))
     val maxDay = perUser.agg(max("lastday").as("maxday"))
-    val users = perUser
-      .withColumn("j", (col("f") - col("f") + 1).cast("int"))
-      .join(
-        broadcast(maxDay.select((col("maxday") - col("maxday") + 1).cast("int").as("j"), col("maxday"))),
-        Seq("j")
-      )
-      .select(
-        col("user_id"),
-        (col("maxday") - col("lastday")).as("r_days"),
-        col("f"),
-        col("m_c"),
-        expr("m_c div 100").as("m_band")
-      )
-      .localCheckpoint()
+    val users = graft.Lineage.checkpoint(
+      perUser
+        .withColumn("j", (col("f") - col("f") + 1).cast("int"))
+        .join(
+          broadcast(maxDay.select((col("maxday") - col("maxday") + 1).cast("int").as("j"), col("maxday"))),
+          Seq("j")
+        )
+        .select(
+          col("user_id"),
+          (col("maxday") - col("lastday")).as("r_days"),
+          col("f"),
+          col("m_c"),
+          expr("m_c div 100").as("m_band")
+        )
+    ).df
     // quintile cuts of one bounded (value, n) histogram: the smallest
     // value whose cumulative count reaches k/5 of the users, k=1..4.
     def cutsOf(metric: String): DataFrame = {

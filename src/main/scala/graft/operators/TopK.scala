@@ -40,24 +40,19 @@ object TopK {
     * per-group position under the total (score desc, id asc) order),
     * filtered to `rk <= k`.
     *
-    * CACHE CONTRACT: with `persistInput = true` (the default) the scored
-    * input is lazily `persist()`ed and NOT unpersisted here — the frame
-    * this returns still reads it. The consumer must drop it after its
-    * action via `spark.catalog.clearCache()` (Bench/Verify/Profile do,
-    * per query); library callers that keep the session alive must do the
-    * same or leak one cache entry per invocation. Pass
-    * `persistInput = false` when the caller's upstream is already
-    * cache/checkpoint-backed and map-only (docs_bm25_search after the
-    * r14 per-doc restructure) — replaying a map-only subtree per
-    * consumer is cheaper than materializing a second cache of it.
+    * CACHE CONTRACT: the scored input is lazily `persist()`ed and NOT
+    * unpersisted here — the frame this returns still reads it. The
+    * consumer must drop it after its action via
+    * `spark.catalog.clearCache()` (Bench/Verify/Profile do, per query);
+    * library callers that keep the session alive must do the same or
+    * leak one cache entry per invocation.
     */
   def topkPerGroup(
       df: DataFrame,
       groupCol: String,
       scoreCol: String,
       idCol: String,
-      k: Int,
-      persistInput: Boolean = true
+      k: Int
   ): DataFrame = {
     // Sentinel-coalesced join form of the group key: an equi-join on a
     // null key matches nothing, which would silently drop null groups
@@ -70,9 +65,9 @@ object TopK {
     // race-free in this shape (unlike the concurrent-shuffle consumers
     // assignClusters had); the caller releases it per the scaladoc
     // cache contract above.
-    val keyed0 = df
+    val keyed = df
       .withColumn("__gk", coalesce(col(groupCol).cast("string"), lit("\u0000")))
-    val keyed = if (persistInput) keyed0.persist() else keyed0
+      .persist()
     val hist = keyed.groupBy("__gk", scoreCol).agg(count(lit(1)).as("__c"))
     val byScoreDesc = Window.partitionBy("__gk").orderBy(col(scoreCol).desc)
     val cells = hist

@@ -46,18 +46,15 @@ object TriangleQueries {
     // via Lineage.releaseHeld (Bench/Verify per query).
     // Canonicalize defensively: (least, greatest) + distinct makes the
     // count correct even for callers that emit both directions.
-    val edges = graft.Lineage.hold(
-      graft.Checkpoint.of(
-        edges0
-          .select(
-            least(col("doc_a"), col("doc_b")).as("u"),
-            greatest(col("doc_a"), col("doc_b")).as("v")
-          )
-          .filter(col("u") =!= col("v"))
-          .distinct()
-      ),
-      "TriangleQueries.edges"
-    )
+    val edges = graft.Lineage.checkpoint(
+      edges0
+        .select(
+          least(col("doc_a"), col("doc_b")).as("u"),
+          greatest(col("doc_a"), col("doc_b")).as("v")
+        )
+        .filter(col("u") =!= col("v"))
+        .distinct()
+    ).df
     val deg = edges
       .select(col("u").as("id"))
       .unionByName(edges.select(col("v").as("id")))
@@ -68,19 +65,16 @@ object TriangleQueries {
       .join(deg.select(col("id").as("v"), col("dg").as("dv")), Seq("v"))
     val uFirst =
       col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = graft.Lineage.hold(
-      graft.Checkpoint.of(
-        withDeg
-          .select(
-            when(uFirst, col("u")).otherwise(col("v")).as("src"),
-            when(uFirst, col("v")).otherwise(col("u")).as("dst"),
-            // the dst endpoint's degree, carried so wedge ordering and the
-            // closing edge's orientation agree without another join
-            when(uFirst, col("dv")).otherwise(col("du")).as("ddg")
-          )
-      ),
-      "TriangleQueries.oriented"
-    )
+    val oriented = graft.Lineage.checkpoint(
+      withDeg
+        .select(
+          when(uFirst, col("u")).otherwise(col("v")).as("src"),
+          when(uFirst, col("v")).otherwise(col("u")).as("dst"),
+          // the dst endpoint's degree, carried so wedge ordering and the
+          // closing edge's orientation agree without another join
+          when(uFirst, col("dv")).otherwise(col("du")).as("ddg")
+        )
+    ).df
     val e1 = oriented.select(col("src"), col("dst").as("b"), col("ddg").as("bdg"))
     val e2 = oriented.select(col("src"), col("dst").as("c"), col("ddg").as("cdg"))
     val wedges = e1
@@ -92,10 +86,7 @@ object TriangleQueries {
     // (bdg, b) < (cdg, c) in the orientation order, so the b—c edge, if
     // present, is oriented exactly b → c: one equi-join closes wedges.
     val closing = oriented.select(col("src").as("b"), col("dst").as("c"))
-    val tris = graft.Lineage.hold(
-      graft.Checkpoint.of(wedges.join(closing, Seq("b", "c"))),
-      "TriangleQueries.tris"
-    )
+    val tris = graft.Lineage.checkpoint(wedges.join(closing, Seq("b", "c"))).df
     tris
       .select(col("a").as("doc_id"))
       .unionByName(tris.select(col("b").as("doc_id")))

@@ -128,11 +128,11 @@ object UnigramLm {
 
   /** Viterbi-segment every distinct word under the mined vocab. */
   def viterbiOf(docs: DataFrame): DataFrame = {
-    // localCheckpoint (vocab-bounded frame), not persist: both the edge
-    // and the vocab branch of the ONE returned plan read it, and the
-    // context cleaner releases checkpoint blocks once the frame is
-    // unreferenced — no cache entry outlives the query.
-    val wf = wordsOf(docs).localCheckpoint()
+    // Checkpoint (vocab-bounded frame), not persist: both the edge and
+    // the vocab branch of the ONE returned plan read it; the consumer's
+    // Lineage.releaseHeld() frees it after the action, and no cache
+    // entry outlives the query.
+    val wf = graft.Lineage.checkpoint(wordsOf(docs)).df
     viterbiWithVocab(wf, vocabOfWf(wf).select("piece", "lp_mu"))
   }
 
@@ -195,26 +195,24 @@ object UnigramLm {
     * never leaves the cluster (contrast [[Bpe.train]]'s driver-side
     * merge list: here the M-step is itself a distributed aggregate).
     * Iterations follow Bpe.train's checkpoint discipline: each vocab_k
-    * is eagerly localCheckpoint'ed and the previous checkpoint's
-    * blocks released, so plan depth and resident state stay flat in K.
+    * is eagerly checkpointed and the previous checkpoint
+    * released, so plan depth and resident state stay flat in K.
     * The oracle replays ALL K iterations as unrolled CTE rounds.
     */
   def trainOf(docs: DataFrame): DataFrame = {
-    val wf = wordsOf(docs).localCheckpoint()
+    val wf = graft.Lineage.checkpoint(wordsOf(docs)).df
     val occ = occurrencesOf(wf)
-    var vocab = vocabOfWf(wf).localCheckpoint()
+    var vocab = graft.Lineage.checkpoint(vocabOfWf(wf))
     // The immortal single-char alphabet — checkpointed on its own so
-    // releasing a vocab round's blocks can never orphan its lineage.
-    val singles = vocab.filter(length(col("piece")) === 1).select("piece").localCheckpoint()
-    var ckpt = graft.Lineage.checkpointRdd(vocab, "UnigramEm")
+    // releasing a vocab round can never orphan its lineage.
+    val singles =
+      graft.Lineage.checkpoint(vocab.df.filter(length(col("piece")) === 1).select("piece")).df
     for (_ <- 1 to EmIters) {
-      val next = emStep(occ, vocab.select("piece", "lp_mu"), singles).localCheckpoint()
-      val prev = ckpt
-      ckpt = graft.Lineage.checkpointRdd(next, "UnigramEm")
+      val next = graft.Lineage.checkpoint(emStep(occ, vocab.df.select("piece", "lp_mu"), singles))
+      vocab.release()
       vocab = next
-      prev.foreach(_.unpersist(false))
     }
-    vocab
+    vocab.df
   }
 
   /** One hard-EM iteration: vocab_{k-1}(piece, lp_mu) → vocab_k(piece,

@@ -341,7 +341,7 @@ object VideoShots {
     // fingerprint aggregate plus both verify sides — checkpoint once
     // so the decode pipeline never replays per branch (the
     // ImageFeatures.nearDupOf discipline; released via releaseHeld).
-    val st = graft.Lineage.hold(shots.localCheckpoint(), "VideoShots.nearDupOf")
+    val st = graft.Lineage.checkpoint(shots).df
     val fp = st
       .groupBy(col("media_id"), col("n_shots"))
       .agg(
@@ -407,7 +407,7 @@ object VideoShots {
     * of pair generation, the banding discipline.
     */
   def shotOverlapOf(shots: DataFrame): DataFrame = {
-    val st = graft.Lineage.hold(shots.localCheckpoint(), "VideoShots.shotOverlapOf")
+    val st = graft.Lineage.checkpoint(shots).df
     val hs = st.select(col("media_id"), col("n_shots"), col("shot_hash")).distinct()
     val heavy = hs
       .groupBy("shot_hash")
@@ -471,7 +471,7 @@ object VideoShots {
   }
 
   def neardupIndexOf(corpusShots: DataFrame): VideoNeardupIndex = {
-    val cs = graft.Lineage.hold(corpusShots.localCheckpoint(), "VideoShots.neardupIndexOf")
+    val cs = graft.Lineage.checkpoint(corpusShots).df
     val corpusBands = bandsOf(cs)
     val heavy = corpusBands
       .groupBy("b", "v")
@@ -489,7 +489,7 @@ object VideoShots {
     * [[nearDupIncrementalOf]] for semantics).
     */
   def nearDupIncrementalIndexed(batchShots: DataFrame, index: VideoNeardupIndex): DataFrame = {
-    val bs = graft.Lineage.hold(batchShots.localCheckpoint(), "VideoShots.nearDupIncremental")
+    val bs = graft.Lineage.checkpoint(batchShots).df
     val cs = index.corpusShots
     val cand = bandsOf(bs)
       .select(col("b"), col("v"), col("media_id").as("b_media"))

@@ -37,7 +37,7 @@ object WordPiece {
     * actual segmentation, not just its length.
     */
   def encodeOf(docs: DataFrame): DataFrame = {
-    val wf = UnigramLm.wordsOf(docs).localCheckpoint()
+    val wf = graft.Lineage.checkpoint(UnigramLm.wordsOf(docs)).df
     val occ = UnigramLm.occurrencesOf(wf)
     val vocab = UnigramLm.vocabOfWf(wf).select("piece")
     // Longest vocabulary match at each 0-based start j (≥ 1 everywhere:

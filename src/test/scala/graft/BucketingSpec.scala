@@ -227,6 +227,28 @@ class BucketingSpec extends SparkSuite {
     }
   }
 
+  test("dedupIncrementalBucketed never builds the clustered corpus when the layout exists") {
+    import spark.implicits._
+    val dir = "/tmp/graft_bucketed_byname_" + System.nanoTime()
+    val table = "graft_bucketed_byname_spec"
+    val records = Seq(
+      ("a.1", "a", "Some Title", "smith john", 1999, "0306406152"),
+      ("b.1", "b", "Some Title", "smith john", 1999, "")
+    ).toDF("id", "source_id", "title", "author", "year", "isbn")
+    try {
+      Dedup.dedupIncrementalBucketed(
+        records, records.withColumn("dedup_id", col("id")), table, dir, refresh = true
+      )
+      def unbuilt: org.apache.spark.sql.DataFrame = throw new AssertionError("clustered was evaluated")
+      val got = Dedup.dedupIncrementalBucketed(records, unbuilt, table, dir).collect()
+      assert(got.length == 2)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      Lineage.releaseHeld()
+      deleteRecursively(dir)
+    }
+  }
+
   test("neardupClustersBucketed: exchange-free band join, identical output") {
     val dir = "/tmp/graft_bucketed_bands_" + System.nanoTime()
     val table = "graft_bucketed_bands_spec"

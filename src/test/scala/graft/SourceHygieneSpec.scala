@@ -34,4 +34,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f: byte 0x${"%02x".format(bytes(i))} at offset $i"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("every checkpoint in src/main goes through graft.Lineage") {
+    // Dataset.checkpoint / localCheckpoint called anywhere but Core.scala
+    // would bypass the handle registry, so releaseHeld() could not free it.
+    val raw = """\.localCheckpoint\(|(?<!Lineage)\.checkpoint\(""".r
+    val offenders = for {
+      f <- scalaFiles(Paths.get("src/main/scala")) if f.getFileName.toString != "Core.scala"
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex if raw.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
