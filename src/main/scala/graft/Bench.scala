@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds.
   *
@@ -12,16 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // Group 1: the headline set, FROZEN since r4 so per-query numbers
     // and the reported total compare round-over-round. Group 2 (r10):
     // the newer hot families (BM25, bounded top-k, strided spans,
@@ -37,15 +26,11 @@ object Bench {
     // each query's generated code (at bench scale codegen latency rivals
     // the actual work; on a real cluster it is amortized to noise).
     chosen.foreach { q =>
-      try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] warmup ${q.name} failed: ${e.getMessage}")
+      Harness.run(spark, q, sfDir)(Harness.noop).failed.foreach { e =>
+        System.err.println(s"[bench] warmup ${q.name} failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      graft.Lineage.releaseHeld()
     }
-    // Two timed passes, per-query minimum: a single pass is hostage to
+    // Timed passes, per-query minimum: a single pass is hostage to
     // transient machine load (round-3 recorded a 2× "regression" on
     // events_sessionize that was contention, not the plan — the same build
     // measured 0.67 s idle vs 2.09 s under load). The min over passes is
@@ -55,21 +40,13 @@ object Bench {
     // ~2-core load that uniformly inflates short parallel queries ~40%;
     // the min over three passes recovers the steady-state plan cost more
     // often than over two (the quantity that extrapolates to a cluster).
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt.max(1)
-    val timings = (1 to passes).map { _ =>
+    val timings = (1 to 3).map { _ =>
       chosen.map { q =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { q.fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
-              false
-          }
-        spark.catalog.clearCache() // drop per-query persisted datasets
-        graft.Lineage.releaseHeld() // and every checkpoint still held
         // A failed query must not read as a (fast) success: report -1.
-        q.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        q.name -> Harness.run(spark, q, sfDir)(Harness.noop).recover { case e =>
+          System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
+          -1.0
+        }.get
       }
     }
     val results = chosen.map(_.name).map { name =>

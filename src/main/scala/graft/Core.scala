@@ -58,9 +58,10 @@ final class Checkpointed private[graft] (val df: DataFrame, rdd: org.apache.spar
   * Release contract: an iterative operator releases each round's handle
   * once the next round has materialized past it. Every handle is also
   * registered here, and [[releaseHeld]] frees whatever is still
-  * registered; consumers (Verify, Bench, Profile, ScaleProbe, the
-  * benchmark harness) call it after each query's action, so storage is
-  * freed on every path, a query that threw mid-loop included. A frame
+  * registered; [[Harness.run]] (behind Verify, Bench, Profile and
+  * Explain), ScaleProbe's probes, PlanSpec and the benchmark harness
+  * call it after each query's action, so storage is freed on every
+  * path, a query that threw mid-loop included. A frame
   * returned before a `releaseHeld()` must not be re-executed after it:
   * its checkpoint is gone, so re-derive it instead.
   */
@@ -143,8 +144,7 @@ object Tables {
     * Row-to-partition assignment is deterministic (Spark sorts before
     * round-robin repartition, SPARK-23207) and the consumers feed
     * partition-order-independent aggregates; the full oracle sweep
-    * certifies output equality. `SPARK_GRAFT_FANOUT=off` disables it
-    * for A/B measurement.
+    * certifies output equality.
     */
   def fanOutForCpu(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
@@ -159,16 +159,13 @@ object Tables {
     // exchange — the conservative side. Non-file inputs (0 files)
     // skip the fan-out.
     val files = df.inputFiles.length
-    if (fanOutEnabled && files > 0 && files * 2 <= par) df.repartition(par)
+    if (files > 0 && files * 2 <= par) df.repartition(par)
     else df
   }
 
-  private val fanOutEnabled =
-    sys.env.getOrElse("SPARK_GRAFT_FANOUT", "on") != "off"
-
   /** The events table carries nanosecond parquet timestamps, which Spark's
     * vectorized reader rejects by default. We read them as raw nanos
-    * (`spark.sql.legacy.parquet.nanosAsLong`, set in Verify/Bench sessions)
+    * (`spark.sql.legacy.parquet.nanosAsLong`, set by [[Harness.session]])
     * and convert to microsecond TimestampType here — the same truncation
     * DuckDB applies, keeping the oracle comparable. When a session reads
     * them as timestamps natively, this is a no-op.

@@ -1,10 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable
-
 /** Stage-level profiler for the registered queries — the measurement tool
   * behind the optimization rounds (spark_optimization_guide §1: decide
   * where the time goes BEFORE changing anything).
@@ -19,112 +14,31 @@ import scala.collection.mutable
   * Usage: runMain graft.Profile [sfDir] [queryName ...]
   */
 object Profile {
-  private case class StageAgg(
-      var taskTimeMs: Long = 0L,
-      var maxTaskMs: Long = 0L,
-      var nTasks: Int = 0,
-      var shuffleReadB: Long = 0L,
-      var shuffleWriteB: Long = 0L,
-      var inputB: Long = 0L,
-      var spillB: Long = 0L,
-      var taskMs: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty
-  )
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // stageId -> (query, agg). Attribution rides the JOB DESCRIPTION the
-    // stage was SUBMITTED with (a stage property, set per measured query
-    // below), not a volatile flag read at task end: the listener bus
-    // lags the driver, so tasks completing after a flag flip would be
-    // misattributed to the next query (r13 ADVICE).
-    @volatile var current = "warmup"
-    val stages = mutable.LinkedHashMap.empty[(String, Int), StageAgg]
-    val stageNames = mutable.HashMap.empty[Int, String]
-    val stageQuery = mutable.HashMap.empty[Int, String]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageSubmitted(ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        stages.synchronized {
-          val desc = Option(ss.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-          stageQuery(ss.stageInfo.stageId) = desc.getOrElse(current)
-        }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) stages.synchronized {
-          val who = stageQuery.getOrElse(t.stageId, current)
-          val agg = stages.getOrElseUpdate((who, t.stageId), StageAgg())
-          val ms = m.executorRunTime
-          agg.taskTimeMs += ms
-          agg.maxTaskMs = math.max(agg.maxTaskMs, ms)
-          agg.nTasks += 1
-          agg.taskMs += ms
-          agg.shuffleReadB += m.shuffleReadMetrics.totalBytesRead
-          agg.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
-          agg.inputB += m.inputMetrics.bytesRead
-          agg.spillB += m.memoryBytesSpilled
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        stages.synchronized {
-          stageNames(sc.stageInfo.stageId) = sc.stageInfo.name.linesIterator.next()
-        }
-    })
-
+    val spark = Harness.session(Harness.cpus)
+    val stages = Harness.stages(spark)
     val chosen = SparkEntry.registry.filter(q =>
       if (names.isEmpty) q.bench || q.bench2 else names.contains(q.name)
     )
     chosen.foreach { q =>
       // Warmup (codegen + any write-once bucketed layout).
-      current = s"warmup:${q.name}"
-      try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[profile] warmup ${q.name} failed: ${e.getMessage}")
+      Harness.run(spark, q, sfDir)(Harness.noop).failed.foreach { e =>
+        System.err.println(s"[profile] warmup ${q.name} failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      graft.Lineage.releaseHeld()
-      // Measured pass.
-      current = q.name
-      spark.sparkContext.setJobDescription(q.name)
-      val t0 = System.nanoTime()
-      try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[profile] ${q.name} FAILED: ${e.getMessage}")
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.setJobDescription(null)
-      spark.catalog.clearCache()
-      graft.Lineage.releaseHeld()
-      // Drain the async listener bus before reading the aggregates, so
-      // short queries don't print incomplete stage rows (r13 ADVICE).
-      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-      val mine = stages.synchronized {
-        stages.toSeq.filter(_._1._1 == q.name)
-      }
+      val wall = stages.attribute(q.name)(Harness.run(spark, q, sfDir)(Harness.noop)).recover { case e =>
+        System.err.println(s"[profile] ${q.name} FAILED: ${e.getMessage}")
+        -1.0
+      }.get
+      val mine = stages.of(q.name).filter(_.taskMs.nonEmpty)
       println(f"==== ${q.name} wall=$wall%.3f s ====")
-      val totalTask = mine.map(_._2.taskTimeMs).sum
+      val totalTask = mine.map(_.taskTimeMs).sum
       println(f"  total task time ${totalTask / 1e3}%.2f s across ${mine.size} stages")
-      mine.sortBy(-_._2.taskTimeMs).take(12).foreach { case ((_, sid), a) =>
-        val med =
-          if (a.taskMs.isEmpty) 0L
-          else a.taskMs.sorted.apply(a.taskMs.size / 2)
-        val nm = stageNames.getOrElse(sid, "?")
+      mine.sortBy(-_.taskTimeMs).take(12).foreach { a =>
         println(
-          f"  stage $sid%4d ${a.taskTimeMs / 1e3}%7.2fs tasks=${a.nTasks}%3d max=${a.maxTaskMs}%5dms med=$med%5dms " +
-            f"sr=${a.shuffleReadB / 1e6}%8.1fMB sw=${a.shuffleWriteB / 1e6}%8.1fMB in=${a.inputB / 1e6}%8.1fMB spill=${a.spillB / 1e6}%6.1fMB  $nm"
+          f"  stage ${a.id}%4d ${a.taskTimeMs / 1e3}%7.2fs tasks=${a.taskMs.size}%3d max=${a.maxTaskMs}%5dms med=${a.medianTaskMs}%5dms " +
+            f"sr=${a.shuffleReadB / 1e6}%8.1fMB sw=${a.shuffleWriteB / 1e6}%8.1fMB in=${a.inputB / 1e6}%8.1fMB spill=${a.spillB / 1e6}%6.1fMB  ${a.name}"
         )
       }
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, DedupQueries, LlmQueries, LlmQueries6}
 
@@ -15,36 +15,45 @@ import graft.operators.{Dedup, DedupQueries, LlmQueries, LlmQueries6}
   * true-skew pair `skewpairs`/`skewcluster` (shared-text mega-duplicate
   * corpus — probes bucket skew rather than distinct-content growth).
   * Every run appends a `SCALE-MEM` line (cumulative shuffle spill +
-  * peak per-task execution memory) — the memory axis of the probe.
-  * Usage: `runMain graft.ScaleProbe [mode] [mult]`.
+  * peak per-task execution memory, from [[Harness.stages]]) — the memory
+  * axis of the probe. Checkpoints an operator held are released after
+  * each timed count and at the end of every mode.
+  * Usage: `runMain graft.ScaleProbe [mode] [mult]` (cores: [[Harness.cpus]]).
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.filterNot(_.forall(_.isDigit)).getOrElse("dedup")
     val mult = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val sfDir = "/root/testdata/sf0.1"
-
     // Memory axis of the scale probe: cumulative shuffle spill and the
     // per-task execution-memory peak across the whole run, so the N×
     // sweeps report whether memory pressure grows with the corpus (it
     // must NOT for the bounded-state operators) alongside wall time.
-    val spillMem = new java.util.concurrent.atomic.AtomicLong
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    val peakTaskMem = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-          peakTaskMem.updateAndGet(v => math.max(v, m.peakExecutionMemory))
-        }
-      }
-    })
+    val stages = Harness.stages(spark)
+
+    /** `body`'s result and the wall seconds it took. */
+    def timed[A](body: => A): (A, Double) = {
+      val t0 = System.nanoTime()
+      val a = body
+      (a, (System.nanoTime() - t0) / 1e9)
+    }
+
+    /** The common probe: counts `input`, times the count of `op(input)`,
+      * releases the checkpoints the operator held, and prints
+      * `SCALE mode=… mult=… <inLabel>=<input rows><extra> <outLabel>=<output rows> time=… s`.
+      */
+    def timedCount(inLabel: String, input: DataFrame, outLabel: String, extra: String = "")(
+        op: DataFrame => DataFrame
+    ): Unit = {
+      val total = input.count()
+      val (n, t) = try timed(op(input).count()) finally Lineage.releaseHeld()
+      println(f"SCALE mode=$mode mult=$mult $inLabel=$total$extra $outLabel=$n time=$t%.1f s")
+    }
+
+    /** `base` unioned with `replica(i)` for i in 1 until mult. */
+    def replicate(base: DataFrame)(replica: Int => DataFrame): DataFrame =
+      (1 until mult).map(replica).foldLeft(base)(_ union _)
 
     /** Documents replicated with every replica's shingles/segments made
       * disjoint: a per-replica suffix on EVERY word renames the whole
@@ -57,66 +66,91 @@ object ScaleProbe {
       */
     def docsReplicated: DataFrame = {
       val base = Tables.documents(spark, sfDir).select("doc_id", "text")
-      (0 until mult).map { i =>
-        if (i == 0) base
-        else
-          base.select(
-            (col("doc_id") + i * 1000000L).as("doc_id"),
-            regexp_replace(col("text"), "(\\S+)", s"$$1zz$i").as("text")
-          )
-      }.reduce(_ union _)
+      replicate(base)(i =>
+        base.select(
+          (col("doc_id") + i * 1000000L).as("doc_id"),
+          regexp_replace(col("text"), "(\\S+)", s"$$1zz$i").as("text")
+        )
+      )
     }
 
-    /** TRUE-duplicate skew: the base corpus plus mult×2000 verbatim
-      * copies of one document (distinct doc_ids, SHARED text — no
-      * vocabulary rename). All copies land in the same 4 band buckets,
-      * exactly the boilerplate-page shape of a web corpus: uncapped, the
-      * within-bucket self-join is (mult×2000)² pairs; with the
-      * MaxBucketSize guard, pair generation drops the mega-bucket
-      * (surfaced by the heavy-bucket diagnostic) and clustering connects
-      * it via O(n) star edges. The bijective-rename probes above measure
-      * growth of DISTINCT content; this one measures bucket skew.
+    /** Dedup records replicated with replicas disjoint in ALL dedup keys
+      * (title + isbn), not just ids — otherwise blocks merge across
+      * replicas and candidate pairs grow quadratically in `mult`,
+      * measuring block growth rather than corpus growth. Prefixing the
+      * title perturbs its title_key; clearing the isbn on replicas keeps
+      * isbn blocks constant-size.
       */
-    def docsSkewed: DataFrame = {
-      val base = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val mega = base
-        .filter(col("doc_id") === 7)
-        .select(
-          explode(sequence(lit(0L), lit(mult * 2000L - 1))).as("r"),
-          col("text")
-        )
-        .select((col("r") + 900000000L).as("doc_id"), col("text"))
-      base.union(mega)
+    def recordsReplicated: DataFrame = {
+      val base = DedupQueries.records(spark, sfDir)
+      replicate(base)(i =>
+        base
+          .withColumn("id", concat(lit(s"x$i."), col("id")))
+          .withColumn("title", concat(lit(s"x$i"), col("title")))
+          .withColumn("isbn", lit(""))
+      )
+    }
+
+    /** TRUE-duplicate skew: `base` plus mult×2000 verbatim copies of row
+      * 7's `value` under distinct ids (900000000 + r). For documents all
+      * copies land in the same 4 band buckets, exactly the
+      * boilerplate-page shape of a web corpus: uncapped, the within-bucket
+      * self-join is (mult×2000)² pairs; with the MaxBucketSize guard,
+      * pair generation drops the mega-bucket (surfaced by the heavy-bucket
+      * diagnostic) and clustering connects it via O(n) star edges. The
+      * bijective-rename probes above measure growth of DISTINCT content;
+      * this one measures bucket skew.
+      */
+    def withMegaCopies(base: DataFrame, id: String, value: String): DataFrame =
+      base.union(
+        base
+          .filter(col(id) === 7)
+          .select(explode(sequence(lit(0L), lit(mult * 2000L - 1))).as("r"), col(value))
+          .select((col("r") + 900000000L).as(id), col(value))
+      )
+    def docsSkewed: DataFrame =
+      withMegaCopies(Tables.documents(spark, sfDir).select("doc_id", "text"), "doc_id", "text")
+
+    /** 90% of documents in ONE language ("xx"), the rest spread over 7. */
+    val mostlyOneLang =
+      when(col("doc_id") % 10 < 9, lit("xx"))
+        .otherwise(concat(lit("l"), (col("doc_id") % 7).cast("string")))
+
+    /** The codec probes' input: 8 images of (256·mult)² pixels made by
+      * `encode(id, w, h)`, persisted, with their payload MiB and the
+      * seconds synthesis took. Synthesis (per-partition JVM work) is timed
+      * apart so encode cost never pollutes the decode measurement.
+      */
+    def encodedImages(
+        encode: (Long, Int, Int) => Array[Byte]
+    ): (Dataset[operators.DeflateMedia.MediaRow], Double, Double) = {
+      import spark.implicits._
+      val side = 256 * mult
+      val ((imgs, bytes), t) = timed {
+        val imgs = spark
+          .range(1, 9)
+          .select((col("id") + 100L).as("media_id"))
+          .as[Long]
+          .mapPartitions(_.map(id => operators.DeflateMedia.MediaRow(id, encode(id, side, side))))
+          .persist()
+        (imgs, imgs.agg(sum(length(col("payload")))).collect()(0).getLong(0))
+      }
+      (imgs, bytes / 1048576.0, t)
     }
 
     mode match {
       case "skewpairs" =>
-        val big = docsSkewed
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = LlmQueries.minhashPairsOf(big).count()
-        println(f"SCALE mode=skewpairs mult=$mult docs=$total pairs=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", docsSkewed, "pairs")(LlmQueries.minhashPairsOf(_))
       case "skewcluster" =>
-        val big = docsSkewed
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.LlmQueries8
-          .neardupClusters(big, 0.8)
-          .filter(!col("is_canonical"))
-          .count()
-        println(f"SCALE mode=skewcluster mult=$mult docs=$total merged=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", docsSkewed, "merged")(d =>
+          operators.LlmQueries8.neardupClusters(d, 0.8).filter(!col("is_canonical"))
+        )
       case "minhash" =>
-        val big = docsReplicated
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = LlmQueries.minhashPairsOf(big).count()
-        println(f"SCALE mode=minhash mult=$mult docs=$total pairs=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", docsReplicated, "pairs")(LlmQueries.minhashPairsOf(_))
       case "segdedup" =>
-        val big = docsReplicated
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = LlmQueries6.segmentStatsOf(big).filter(col("n_common") > 0).count()
-        println(f"SCALE mode=segdedup mult=$mult docs=$total common_docs=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", docsReplicated, "common_docs")(d =>
+          LlmQueries6.segmentStatsOf(d).filter(col("n_common") > 0)
+        )
       case "cc" =>
         // Star-contraction connected components over a synthesized
         // permuted-chain graph of mult×100k nodes in 64-node chains
@@ -130,24 +164,19 @@ object ScaleProbe {
           spark.range(n).select(col("id").as("p_partkey")),
           chainLen = 64
         )
-        val t0 = System.nanoTime()
-        val labeled = operators.ConnectedComponents.connectedComponents(edges)
-        val comps = labeled.select("component_id").distinct().count()
-        val total = labeled.count()
+        val ((comps, total), t) = timed {
+          val labeled = operators.ConnectedComponents.connectedComponents(edges)
+          (labeled.select("component_id").distinct().count(), labeled.count())
+        }
         // 64-node chains over n nodes → ceil(n/64) components (the tail
         // chain counts); a mismatch means contraction merged or split
         // chains.
         assert(comps == (n + 63) / 64, s"expected ${(n + 63) / 64} components, got $comps")
-        println(f"SCALE mode=cc mult=$mult nodes=$total components=$comps time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        println(f"SCALE mode=cc mult=$mult nodes=$total components=$comps time=$t%.1f s")
       case "cluster" =>
-        val big = docsReplicated
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.LlmQueries8
-          .neardupClusters(big, 0.8)
-          .filter(!col("is_canonical"))
-          .count()
-        println(f"SCALE mode=cluster mult=$mult docs=$total merged=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", docsReplicated, "merged")(d =>
+          operators.LlmQueries8.neardupClusters(d, 0.8).filter(!col("is_canonical"))
+        )
       case "semskew" =>
         // TRUE-duplicate skew for SemDeDup: base embeddings plus
         // mult×2000 verbatim copies of one vector (distinct ids, same
@@ -161,18 +190,9 @@ object ScaleProbe {
             col("vec_id"),
             transform(col("embedding"), x => x.cast("double")).as("vec")
           )
-        val mega = base
-          .filter(col("vec_id") === 7)
-          .select(
-            explode(sequence(lit(0L), lit(mult * 2000L - 1))).as("r"),
-            col("vec")
-          )
-          .select((col("r") + 900000000L).as("vec_id"), col("vec"))
-        val big = base.union(mega)
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.LlmQueries5.semdedupOf(big).filter(!col("kept")).count()
-        println(f"SCALE mode=semskew mult=$mult vectors=$total dropped=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("vectors", withMegaCopies(base, "vec_id", "vec"), "dropped")(d =>
+          operators.LlmQueries5.semdedupOf(d).filter(!col("kept"))
+        )
       case "kmeans" =>
         // One Lloyd step over an N×-replicated embedding corpus: the
         // aggregate key space stays K×D no matter the corpus size, so
@@ -185,10 +205,7 @@ object ScaleProbe {
           .select(explode(sequence(lit(0), lit(mult - 1))).as("r"), col("id"), col("vec"))
           .select((col("id") + col("r") * 10000000L).as("id"), col("vec"))
         val seeds = base.filter(col("id") < 16).select(col("id").as("cell"), col("vec").as("cv"))
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.KMeans.step(big, seeds).count()
-        println(f"SCALE mode=kmeans mult=$mult vectors=$total cells_x_dims=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("vectors", big, "cells_x_dims")(operators.KMeans.step(_, seeds))
       case "joins" =>
         // Temporal joins over an N×-replicated events table with DISJOINT
         // user spaces per replica: window partitions and (user, bucket)
@@ -198,62 +215,29 @@ object ScaleProbe {
         val base = operators.JoinQueries
           .evts(spark, sfDir)
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("us"))
-        val big = (0 until mult)
-          .map { i =>
-            if (i == 0) base
-            else base.withColumn("user_id", col("user_id") + i * 1000000L)
-          }
-          .reduce(_ union _)
+        val big = replicate(base)(i => base.withColumn("user_id", col("user_id") + i * 1000000L))
         val total = big.count()
-        val t0 = System.nanoTime()
-        val nA = operators.JoinQueries.asofOf(big).count()
-        val t1 = System.nanoTime()
-        val nI = operators.JoinQueries.intervalOf(big).count()
-        val t2 = System.nanoTime()
-        println(
-          f"SCALE mode=joins mult=$mult events=$total asof=$nA (${(t1 - t0) / 1e9}%.1f s) interval=$nI (${(t2 - t1) / 1e9}%.1f s)"
-        )
+        val (nA, tA) = timed(operators.JoinQueries.asofOf(big).count())
+        val (nI, tI) = timed(operators.JoinQueries.intervalOf(big).count())
+        println(f"SCALE mode=joins mult=$mult events=$total asof=$nA ($tA%.1f s) interval=$nI ($tI%.1f s)")
       case "classifier" =>
         // Full K-iteration training + scoring over an N×-replicated
         // corpus (disjoint doc ids, same text/labels): gradients key on
         // 256 buckets regardless of corpus size, the feature frame is
         // map-only to score — time must track the scan, linearly.
         val base = Tables.documents(spark, sfDir).select("doc_id", "text", "lang")
-        val big = (0 until mult)
-          .map { i =>
-            if (i == 0) base
-            else base.withColumn("doc_id", col("doc_id") + i * 10000000L)
-          }
-          .reduce(_ union _)
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.Classifier.scoreOf(big).filter(col("p_mu") > 500000L).count()
-        println(f"SCALE mode=classifier mult=$mult docs=$total high=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        val big = replicate(base)(i => base.withColumn("doc_id", col("doc_id") + i * 10000000L))
+        timedCount("docs", big, "high")(d => operators.Classifier.scoreOf(d).filter(col("p_mu") > 500000L))
       case "incr" =>
         // Incremental mode: a FIXED batch against an N×-growing clustered
         // corpus — the production shape (daily delta vs full history).
         // Time should grow only with the corpus-side key scan (linear),
         // never with batch×corpus.
-        val base = DedupQueries.records(spark, sfDir)
-        val batch = base.limit(2000)
-        val corpus = (0 until mult)
-          .map { i =>
-            if (i == 0) base
-            else
-              base
-                .withColumn("id", concat(lit(s"x$i."), col("id")))
-                .withColumn("title", concat(lit(s"x$i"), col("title")))
-                .withColumn("isbn", lit(""))
-          }
-          .reduce(_ union _)
-          .withColumn("dedup_id", col("id"))
-        val total = corpus.count()
-        val t0 = System.nanoTime()
-        val n = Dedup
-          .dedupIncremental(batch, corpus)
-          .filter(col("dedup_id").isNotNull)
-          .count()
-        println(f"SCALE mode=incr mult=$mult corpus=$total batch=2000 matched=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        val batch = DedupQueries.records(spark, sfDir).limit(2000)
+        val corpus = recordsReplicated.withColumn("dedup_id", col("id"))
+        timedCount("corpus", corpus, "matched", " batch=2000")(c =>
+          Dedup.dedupIncremental(batch, c).filter(col("dedup_id").isNotNull)
+        )
       case "skewjoin" =>
         // AQE skew-join demonstration: a fact table where ~60% of rows
         // share ONE join key (the boilerplate-host shape), sort-merge
@@ -276,7 +260,7 @@ object ScaleProbe {
         )
         // mult replicates fact ROWS at the SAME keys — the hot partition
         // grows mult×, the dim stays fixed.
-        val fact = (0 until mult).map(_ => factBase).reduce(_ unionByName _)
+        val fact = replicate(factBase)(_ => factBase)
         // Dim construction matters twice over: (a) deriving it from
         // `fact` makes the k-Exchange canonically identical on both
         // sides, and a ReusedExchange consumer suppresses
@@ -298,13 +282,11 @@ object ScaleProbe {
             .agg(sum(col("l_quantity")).cast("double").as("s"), count(lit(1)).as("n"))
         def runJoin(): (Double, String) = {
           val joined = skewJoined(fact, dim)
-          val t0 = System.nanoTime()
           // collect (tiny post-agg result) through THIS Dataset's
           // queryExecution so the inspected plan is the FINAL adaptive
           // plan (a separate write re-plans from scratch and reports the
           // pre-execution skeleton without AQEShuffleRead nodes).
-          joined.collect()
-          val t = (System.nanoTime() - t0) / 1e9
+          val (_, t) = timed(joined.collect())
           val plan = joined.queryExecution.executedPlan.toString
           val mark =
             plan.linesIterator
@@ -316,11 +298,6 @@ object ScaleProbe {
               case m  => m
             }
           (t, mark)
-        }
-        if (sys.env.contains("SKEW_DEBUG")) {
-          val dbg = skewJoined(fact, dim)
-          dbg.collect()
-          println(dbg.queryExecution.executedPlan.toString)
         }
         // Count the replicated fact ONCE, before the timed A/B — a count
         // in the println would append another full mult-way scan.
@@ -364,9 +341,7 @@ object ScaleProbe {
             )
         ).df
         val nWords = vocab.count()
-        val t0 = System.nanoTime()
-        val merges = operators.Bpe.train(vocab, k)
-        val t = (System.nanoTime() - t0) / 1e9
+        val (merges, t) = timed(operators.Bpe.train(vocab, k))
         println(
           f"SCALE mode=bpe k=$k vocab_words=$nWords merges=${merges.size} time=$t%.1f s per_merge=${t / math.max(merges.size, 1)}%.3f s"
         )
@@ -377,31 +352,25 @@ object ScaleProbe {
         // regardless of corpus size — depth, not volume, sets them).
         val (archives0, components0) = operators.EadQueries.ead3Frames(spark, sfDir)
         def rep(df: DataFrame): DataFrame =
-          (0 until mult).map { i =>
-            if (i == 0) df
-            else df.withColumn("archive_key", concat(lit(s"r$i."), col("archive_key")))
-          }.reduce(_ unionByName _)
+          replicate(df)(i => df.withColumn("archive_key", concat(lit(s"r$i."), col("archive_key"))))
         val archives = rep(archives0)
         val components = rep(components0)
-        val t0 = System.nanoTime()
-        val n = operators.Ead3Splitter
+        val (n, t) = timed(operators.Ead3Splitter
           .splitArchive(
             archives,
             components,
             unitIdLabel = Some("main"),
             prependParentTitleWithUnitId = true
           )
-          .count()
-        println(f"SCALE mode=ead3 mult=$mult records=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+          .count())
+        println(f"SCALE mode=ead3 mult=$mult records=$n time=$t%.1f s")
       case "repetition" =>
         // Gopher repetition metrics over N× disjoint-vocabulary replicas:
         // all three explode→groupBy passes key on (doc_id, token), so
         // time must track the corpus linearly with flat memory.
-        val big = docsReplicated
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.RepetitionQueries.metricsOf(big).filter(!col("pass")).count()
-        println(f"SCALE mode=repetition mult=$mult docs=$total flagged=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", docsReplicated, "flagged")(d =>
+          operators.RepetitionQueries.metricsOf(d).filter(!col("pass"))
+        )
       case "textstats" =>
         // Round-8 text-statistics family over N× disjoint-vocabulary
         // replicas: winnowing is map-only (must be embarrassingly
@@ -410,22 +379,21 @@ object ScaleProbe {
         // must track the corpus linearly with flat memory.
         val big = docsReplicated.persist()
         val total = big.count()
-        val t0 = System.nanoTime()
-        val nw = operators.WinnowingQueries.winnowOf(big).agg(sum(col("n_fp"))).collect()(0).getLong(0)
-        val t1 = System.nanoTime()
+        val (nw, tw) =
+          timed(operators.WinnowingQueries.winnowOf(big).agg(sum(col("n_fp"))).collect()(0).getLong(0))
         val toks = big.select(col("doc_id"), explode(graft.functions.TextFunctions.words(col("text"))).as("w"))
-        val ne = toks
-          .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-          .groupBy("doc_id")
-          .agg(sum(col("c").cast("double") * log(col("c").cast("double"))).as("clogc"))
-          .count()
-        val t2 = System.nanoTime()
-        val nk = operators.SmoothedLm.knScoreOf(big).count()
-        val t3 = System.nanoTime()
+        val (ne, te) = timed(
+          toks
+            .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
+            .groupBy("doc_id")
+            .agg(sum(col("c").cast("double") * log(col("c").cast("double"))).as("clogc"))
+            .count()
+        )
+        val (nk, tk) = timed(operators.SmoothedLm.knScoreOf(big).count())
         println(
           f"SCALE mode=textstats mult=$mult docs=$total fp_total=$nw " +
-            f"winnow=${(t1 - t0) / 1e9}%.1f s entropy_docs=$ne entropy=${(t2 - t1) / 1e9}%.1f s " +
-            f"kn_docs=$nk kn=${(t3 - t2) / 1e9}%.1f s"
+            f"winnow=$tw%.1f s entropy_docs=$ne entropy=$te%.1f s " +
+            f"kn_docs=$nk kn=$tk%.1f s"
         )
       case "bucketdedup" =>
         // The bucketed-layout A/B at replicated scale: first call pays
@@ -434,37 +402,20 @@ object ScaleProbe {
         // call is the pure read-side run every subsequent day pays.
         // Compare against mode=dedup at the same mult for the
         // unbucketed cost.
-        val base = DedupQueries.records(spark, sfDir)
-        val big = (0 until mult)
-          .map { i =>
-            if (i == 0) base
-            else
-              base
-                .withColumn("id", concat(lit(s"x$i."), col("id")))
-                .withColumn("title", concat(lit(s"x$i"), col("title")))
-                .withColumn("isbn", lit(""))
-          }
-          .reduce(_ union _)
+        val big = recordsReplicated
         val total = big.count()
         val table = s"graft_probe_dedup_m$mult"
         val path = s"/tmp/graft_probe_bucketed/m$mult"
         spark.sql(s"DROP TABLE IF EXISTS $table")
-        val t0 = System.nanoTime()
-        val n1 = Dedup
-          .dedupRecordsBucketed(big, table, path)
-          .filter(col("dedup_id").isNotNull)
-          .count()
-        val t1 = System.nanoTime()
+        def clustered(): Long =
+          Dedup.dedupRecordsBucketed(big, table, path).filter(col("dedup_id").isNotNull).count()
+        val (n1, tWrite) = timed(clustered())
         spark.catalog.clearCache()
-        val n2 = Dedup
-          .dedupRecordsBucketed(big, table, path)
-          .filter(col("dedup_id").isNotNull)
-          .count()
-        val t2 = System.nanoTime()
+        val (n2, tRead) = timed(clustered())
         assert(n1 == n2)
         println(
           f"SCALE mode=bucketdedup mult=$mult records=$total clustered=$n1 " +
-            f"write_plus_read=${(t1 - t0) / 1e9}%.1f s read_only=${(t2 - t1) / 1e9}%.1f s"
+            f"write_plus_read=$tWrite%.1f s read_only=$tRead%.1f s"
         )
       case "pplskew" =>
         // Language-skew probe for the round-8 docs_ppl_buckets rewrite:
@@ -474,20 +425,9 @@ object ScaleProbe {
         // task and time bends superlinear; with histogram-derived cuts
         // the only per-document passes are the bounded-broadcast join
         // and (lang, tie-cell) windows, so time must track the corpus.
-        val big = docsReplicated
-          .withColumn(
-            "lang",
-            when(col("doc_id") % 10 < 9, lit("xx"))
-              .otherwise(concat(lit("l"), (col("doc_id") % 7).cast("string")))
-          )
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.CurationQueries
-          .pplBucketsOf(big)
-          .groupBy("bucket")
-          .count()
-          .count()
-        println(f"SCALE mode=pplskew mult=$mult docs=$total buckets=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", docsReplicated.withColumn("lang", mostlyOneLang), "buckets")(d =>
+          operators.CurationQueries.pplBucketsOf(d).groupBy("bucket").count()
+        )
       case "balskew" =>
         // Mega-cell probe for the round-8 embed_sample_balanced rewrite:
         // base embeddings plus mult×2000 copies of one vector — all in
@@ -497,21 +437,9 @@ object ScaleProbe {
         val base = Tables
           .embeddings(spark, sfDir)
           .select(col("vec_id"), col("embedding"))
-        val mega = base
-          .filter(col("vec_id") === 7)
-          .select(
-            explode(sequence(lit(0L), lit(mult * 2000L - 1))).as("r"),
-            col("embedding")
-          )
-          .select((col("r") + 900000000L).as("vec_id"), col("embedding"))
-        val big = base.union(mega)
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.MixtureQueries2
-          .balancedSampleOf(big)
-          .filter(col("kept"))
-          .count()
-        println(f"SCALE mode=balskew mult=$mult vectors=$total kept=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("vectors", withMegaCopies(base, "vec_id", "embedding"), "kept")(d =>
+          operators.MixtureQueries2.balancedSampleOf(d).filter(col("kept"))
+        )
       case "canonskew" =>
         // Shared-prefix mega-group probe for the round-8 docs_canonical
         // rewrite: base docs plus mult×2000 documents sharing ONE 8-token
@@ -534,10 +462,7 @@ object ScaleProbe {
         val big = baseDocs
           .withColumn("n_chars", col("n_chars").cast("bigint"))
           .unionByName(mega)
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.LlmQueries7.canonicalOf(big).filter(col("canonical")).count()
-        println(f"SCALE mode=canonskew mult=$mult docs=$total canonical=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", big, "canonical")(d => operators.LlmQueries7.canonicalOf(d).filter(col("canonical")))
       case "retrieval" =>
         // BM25 search over replicas with SHARED vocabulary (disjoint
         // doc_ids, same text): the query terms' posting lists grow
@@ -546,13 +471,8 @@ object ScaleProbe {
         // Time must track the corpus; the top-k itself ranks only the
         // (≤10-row) kept cells plus one boundary tie cell per query.
         val base = Tables.documents(spark, sfDir).select("doc_id", "text")
-        val big = (0 until mult)
-          .map(i => base.select((col("doc_id") + i * 1000000L).as("doc_id"), col("text")))
-          .reduce(_ union _)
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.Retrieval.bm25Of(big).count()
-        println(f"SCALE mode=retrieval mult=$mult docs=$total hits=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        val big = replicate(base)(i => base.select((col("doc_id") + i * 1000000L).as("doc_id"), col("text")))
+        timedCount("docs", big, "hits")(operators.Retrieval.bm25Of(_))
       case "topkskew" =>
         // Dominant-group probe for the histogram-cut top-k: 90% of
         // documents in ONE language. The naive per-group rank window
@@ -561,18 +481,11 @@ object ScaleProbe {
         // touching the top k do, and those are ≤ k rows or the one
         // boundary tie cell).
         val big = docsReplicated
-          .withColumn(
-            "lang",
-            when(col("doc_id") % 10 < 9, lit("xx"))
-              .otherwise(concat(lit("l"), (col("doc_id") % 7).cast("string")))
-          )
+          .withColumn("lang", mostlyOneLang)
           .withColumn("q4", (col("doc_id") % 100000).cast("long"))
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.TopK
-          .topkPerGroup(big.select("doc_id", "lang", "q4"), "lang", "q4", "doc_id", 100)
-          .count()
-        println(f"SCALE mode=topkskew mult=$mult docs=$total kept=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", big, "kept")(d =>
+          operators.TopK.topkPerGroup(d.select("doc_id", "lang", "q4"), "lang", "q4", "doc_id", 100)
+        )
       case "topktie" =>
         // Straddling-TIE-CELL probe: 90% of documents share ONE
         // (group, score) cell at the TOP score, so that cell straddles
@@ -586,12 +499,9 @@ object ScaleProbe {
             "q4",
             when(col("doc_id") % 10 < 9, lit(1000000L)).otherwise((col("doc_id") % 1000).cast("long"))
           )
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val kept = operators.TopK
-          .topkPerGroup(big.select("doc_id", "lang", "q4"), "lang", "q4", "doc_id", 100)
-          .count()
-        println(f"SCALE mode=topktie mult=$mult docs=$total kept=$kept time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("docs", big, "kept")(d =>
+          operators.TopK.topkPerGroup(d.select("doc_id", "lang", "q4"), "lang", "q4", "doc_id", 100)
+        )
       case "unigram" =>
         // Tokenizer-scale probe: replica word-renaming grows the DISTINCT
         // vocabulary linearly while document structure stays constant, so
@@ -599,13 +509,11 @@ object ScaleProbe {
         // scale with vocabulary — the dimension that actually grows at
         // 100 TB (the DP itself is O(len·S) per word, corpus-independent).
         val corpus = docsReplicated
-        val t0 = System.nanoTime()
-        val words = operators.UnigramLm.viterbiOf(corpus).count()
-        val t1 = System.nanoTime()
-        val pieces = operators.UnigramLm.vocabOf(corpus).count()
+        val (words, tViterbi) = timed(operators.UnigramLm.viterbiOf(corpus).count())
+        val (pieces, tVocab) = timed(operators.UnigramLm.vocabOf(corpus).count())
         println(
           f"SCALE mode=unigram mult=$mult words=$words pieces=$pieces " +
-            f"viterbi=${(t1 - t0) / 1e9}%.1f s vocab=${(System.nanoTime() - t1) / 1e9}%.1f s"
+            f"viterbi=$tViterbi%.1f s vocab=$tVocab%.1f s"
         )
       case "stridedspans" =>
         // Strided duplicate-span guarantee probe: every doc_id % 10 == 3
@@ -640,11 +548,11 @@ object ScaleProbe {
           .agg(sum(greatest(length(col("text")) - (G - 1), lit(0))))
           .collect()(0)
           .getLong(0)
-        val t0 = System.nanoTime()
-        val anchors = operators.CurationQueries.anchorsOf(corpus).count()
-        val spans = operators.CurationQueries.stridedSpansOf(corpus).persist()
-        val nSpans = spans.count()
-        val tSec = (System.nanoTime() - t0) / 1e9
+        val ((anchors, spans, nSpans), tSec) = timed {
+          val anchors = operators.CurationQueries.anchorsOf(corpus).count()
+          val spans = operators.CurationQueries.stridedSpansOf(corpus).persist()
+          (anchors, spans, spans.count())
+        }
         val plantedPos = corpus
           .filter(col("doc_id") % 10 === 3)
           .select(col("doc_id"), expr("locate(concat('PLANTED', lpad(cast(doc_id % 50 as string), 4, '0')), text)").as("ppos"))
@@ -699,22 +607,20 @@ object ScaleProbe {
         // probe scaffolding (real corpora read parquet binaries), and
         // folding it into the hash timing would misattribute ~all the
         // wall time.
-        val tg0 = System.nanoTime()
         val media = base.unionByName(dups).persist()
-        val nImgs = media.count()
-        val tGen = (System.nanoTime() - tg0) / 1e9
-        val t0 = System.nanoTime()
-        val hashes = operators.ImageFeatures.dhashOf(media).persist()
-        val nh = hashes.count()
-        val t1 = System.nanoTime()
-        val pairs = operators.ImageFeatures.nearDupOf(hashes).persist()
-        val np = pairs.count()
-        val planted = pairs.filter(col("media_b") - col("media_a") === 10000000L).count()
-        val t2 = System.nanoTime()
+        val (nImgs, tGen) = timed(media.count())
+        val ((hashes, nh), tHash) = timed {
+          val hashes = operators.ImageFeatures.dhashOf(media).persist()
+          (hashes, hashes.count())
+        }
+        val ((np, planted), tPairs) = timed {
+          val pairs = operators.ImageFeatures.nearDupOf(hashes).persist()
+          (pairs.count(), pairs.filter(col("media_b") - col("media_a") === 10000000L).count())
+        }
         println(
           f"SCALE mode=imgfeat mult=$mult imgs=$nh/$nImgs bytes_per_img=${256 * 192 * 3} " +
-            f"gen=$tGen%.1f s hash=${(t1 - t0) / 1e9}%.1f s pairs=$np planted=$planted " +
-            f"neardup=${(t2 - t1) / 1e9}%.1f s"
+            f"gen=$tGen%.1f s hash=$tHash%.1f s pairs=$np planted=$planted " +
+            f"neardup=$tPairs%.1f s"
         )
       case "avfeat" =>
         // Audio/video content-identity pipelines at REAL clip sizes
@@ -747,17 +653,15 @@ object ScaleProbe {
             else Iterator(base)
           })
           .persist()
-        val tg0 = System.nanoTime()
-        val nClips = video.count()
-        val tGen = (System.nanoTime() - tg0) / 1e9
-        val t0 = System.nanoTime()
-        val shots = operators.VideoShots.shotTable(video).toDF().persist()
-        val nShots = shots.count()
-        val t1 = System.nanoTime()
-        val vp = operators.VideoShots.nearDupOf(shots).persist()
-        val nvp = vp.count()
-        val planted = vp.filter(col("media_b") - col("media_a") === 10000000L).count()
-        val t2 = System.nanoTime()
+        val (nClips, tGen) = timed(video.count())
+        val ((shots, nShots), tDecode) = timed {
+          val shots = operators.VideoShots.shotTable(video).toDF().persist()
+          (shots, shots.count())
+        }
+        val ((nvp, planted), tPairs) = timed {
+          val vp = operators.VideoShots.nearDupOf(shots).persist()
+          (vp.count(), vp.filter(col("media_b") - col("media_a") === 10000000L).count())
+        }
         val aBase = spark
           .range(n)
           .select(
@@ -784,21 +688,17 @@ object ScaleProbe {
           )
         val audio = aBase.unionByName(aDups).persist()
         val nAudio = audio.count()
-        val t3 = System.nanoTime()
-        val lm = operators.AudioFingerprint
-          .landmarkTable(operators.AudioFingerprint.windowTable(audio))
-        val ap = operators.AudioFingerprint.nearDupOf(lm).persist()
-        val nap = ap.count()
-        val aPlanted = ap
-          .filter(col("media_b") - col("media_a") === 10000000L && col("dt") === 1)
-          .count()
-        val t4 = System.nanoTime()
+        val ((nap, aPlanted), tAudio) = timed {
+          val lm = operators.AudioFingerprint
+            .landmarkTable(operators.AudioFingerprint.windowTable(audio))
+          val ap = operators.AudioFingerprint.nearDupOf(lm).persist()
+          (ap.count(), ap.filter(col("media_b") - col("media_a") === 10000000L && col("dt") === 1).count())
+        }
         println(
           f"SCALE mode=avfeat mult=$mult clips=$nClips shots=$nShots " +
-            f"vdecode=${(t1 - t0) / 1e9}%.1f s vpairs=$nvp planted=$planted vneardup=${(t2 - t1) / 1e9}%.1f s " +
-            f"gen=$tGen%.1f s audio=$nAudio apairs=$nap aplanted=$aPlanted afingerprint=${(t4 - t3) / 1e9}%.1f s"
+            f"vdecode=$tDecode%.1f s vpairs=$nvp planted=$planted vneardup=$tPairs%.1f s " +
+            f"gen=$tGen%.1f s audio=$nAudio apairs=$nap aplanted=$aPlanted afingerprint=$tAudio%.1f s"
         )
-        graft.Lineage.releaseHeld()
 
       case "stridedskew" =>
         // Boilerplate MEGA-GRAM probe (r12): ≥90% of docs get ONE shared
@@ -825,10 +725,10 @@ object ScaleProbe {
           .select("doc_id", "text")
           .persist()
         val total = corpus.count()
-        val t0 = System.nanoTime()
-        val spans = operators.CurationQueries.stridedSpansOf(corpus).persist()
-        val nSpans = spans.count()
-        val tSec = (System.nanoTime() - t0) / 1e9
+        val ((spans, nSpans), tSec) = timed {
+          val spans = operators.CurationQueries.stridedSpansOf(corpus).persist()
+          (spans, spans.count())
+        }
         // Every block-carrying doc must report a span covering its block.
         val covered = corpus
           .filter(col("doc_id") % 10 =!= 3)
@@ -858,10 +758,8 @@ object ScaleProbe {
         val big = docsReplicated.withColumn("lang", lit("xx"))
         val total = big.count()
         val times = Seq(4, 16, 64).map { b =>
-          val t0 = System.nanoTime()
-          val toks = operators.LlmQueries8
-            .packedSequencesProbe(big, b)
-          f"b$b=${toks}tok/${(System.nanoTime() - t0) / 1e9}%.1f s"
+          val (toks, t) = timed(operators.LlmQueries8.packedSequencesProbe(big, b))
+          f"b$b=${toks}tok/$t%.1f s"
         }
         println(s"SCALE mode=packing mult=$mult docs=$total ${times.mkString(" ")}")
       case "pagerank" =>
@@ -884,21 +782,14 @@ object ScaleProbe {
         val sym = raw.unionByName(
           raw.select(col("dst").as("src"), col("src").as("dst"), col("w"))
         )
-        val big = (0 until mult)
-          .map { i =>
-            if (i == 0) sym
-            else
-              sym.select(
-                concat(lit(s"x$i."), col("src")).as("src"),
-                concat(lit(s"x$i."), col("dst")).as("dst"),
-                col("w")
-              )
-          }
-          .reduce(_ union _)
-        val edges = big.count()
-        val t0 = System.nanoTime()
-        val n = operators.GraphQueries.pagerank(big).count()
-        println(f"SCALE mode=pagerank mult=$mult edges=$edges nodes=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        val big = replicate(sym)(i =>
+          sym.select(
+            concat(lit(s"x$i."), col("src")).as("src"),
+            concat(lit(s"x$i."), col("dst")).as("dst"),
+            col("w")
+          )
+        )
+        timedCount("edges", big, "nodes")(operators.GraphQueries.pagerank(_))
       case "trihub" =>
         // Hub skew for triangle counting: the verified near-dup edge set
         // of the base corpus plus a STAR of mult×2000 distinct leaves on
@@ -915,28 +806,21 @@ object ScaleProbe {
         val star = spark
           .range(mult * 2000L)
           .select(lit(888888888L).as("doc_a"), (col("id") + 900000000L).as("doc_b"))
-        val t0 = System.nanoTime()
-        val tri = operators.TriangleQueries
-          .triangleCounts(baseEdges.unionByName(star))
-          .agg(sum(col("n_tri")).as("s"))
-          .collect()(0)
-          .getLong(0)
-        println(
-          f"SCALE mode=trihub mult=$mult baseEdges=$nBase star=${mult * 2000} triCorners=$tri time=${(System.nanoTime() - t0) / 1e9}%.1f s"
+        val (tri, t) = timed(
+          operators.TriangleQueries
+            .triangleCounts(baseEdges.unionByName(star))
+            .agg(sum(col("n_tri")).as("s"))
+            .collect()(0)
+            .getLong(0)
         )
+        println(f"SCALE mode=trihub mult=$mult baseEdges=$nBase star=${mult * 2000} triCorners=$tri time=$t%.1f s")
       case "allpairs" =>
         // Exact-join growth with constant clone-family sizes: replicas
         // are vocabulary-disjoint (id shift is a multiple of 4, so the
         // 1-in-4 sample keeps whole families), pair volume grows
         // linearly in replicas, and the prefix-filter candidate join
         // must track it — a filterless n² join would grow as mult².
-        val docs = docsReplicated.filter(col("doc_id") % 4 === 1)
-        val total = docs.count()
-        val t0 = System.nanoTime()
-        val n = operators.AllPairsJoin.allPairs(docs).count()
-        println(
-          f"SCALE mode=allpairs mult=$mult docs=$total pairs=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s"
-        )
+        timedCount("docs", docsReplicated.filter(col("doc_id") % 4 === 1), "pairs")(operators.AllPairsJoin.allPairs(_))
       case "transskew" =>
         // Hot-user skew for the transition matrix: the events corpus
         // replicated mult× with 90% of all events reassigned to ONE bot
@@ -948,40 +832,27 @@ object ScaleProbe {
         val base = operators.JoinQueries
           .evts(spark, sfDir)
           .select("event_id", "user_id", "us", "event_type")
-        val big = (0 until mult)
-          .map { i =>
-            if (i == 0) base
-            else
-              base.select(
-                (col("event_id") + i * 1000000000L).as("event_id"),
-                col("user_id"),
-                (col("us") + i).as("us"),
-                col("event_type")
-              )
-          }
-          .reduce(_ union _)
-          .withColumn(
-            "user_id",
-            when(col("event_id") % 10 < 9, lit(999999999L)).otherwise(col("user_id"))
+        val replicas = replicate(base)(i =>
+          base.select(
+            (col("event_id") + i * 1000000000L).as("event_id"),
+            col("user_id"),
+            (col("us") + i).as("us"),
+            col("event_type")
           )
+        )
+        val big = replicas.withColumn(
+          "user_id",
+          when(col("event_id") % 10 < 9, lit(999999999L)).otherwise(col("user_id"))
+        )
         val total = big.count()
-        val t0 = System.nanoTime()
-        val steps = operators.TransitionQueries
-          .transitionsOf(big)
-          .agg(sum("n"))
-          .collect()(0)
-          .getLong(0)
-        val t1 = System.nanoTime()
+        val (steps, tTrans) =
+          timed(operators.TransitionQueries.transitionsOf(big).agg(sum("n")).collect()(0).getLong(0))
         // The de-skewed as-of join shares the day-salt shape; `big`
         // carries ts only implicitly, so rebuild it for asofOf's
         // (event_id, ts, user_id, event_type, us) contract.
         val asofIn = big.withColumn("ts", timestamp_micros(col("us")))
-        val matched = operators.JoinQueries
-          .asofOf(asofIn)
-          .agg(count(col("click_event_id")))
-          .collect()(0)
-          .getLong(0)
-        val t2 = System.nanoTime()
+        val (matched, tAsof) =
+          timed(operators.JoinQueries.asofOf(asofIn).agg(count(col("click_event_id"))).collect()(0).getLong(0))
         // The de-skewed sessionize shares the shape; feed it through a
         // temp view dir-free by writing nothing — call the registered
         // query body on a parquet round-trip of the skewed frame.
@@ -992,13 +863,11 @@ object ScaleProbe {
           .write
           .mode("overwrite")
           .parquet(s"$dir/events.parquet")
-        val sessions = SparkEntry
-          .queries("events_sessionize")(spark, dir)
-          .count()
+        val (sessions, tSess) = timed(SparkEntry.queries("events_sessionize")(spark, dir).count())
         println(
-          f"SCALE mode=transskew mult=$mult events=$total steps=$steps trans_t=${(t1 - t0) / 1e9}%.1f s " +
-            f"asof_matched=$matched asof_t=${(System.nanoTime() - t1) / 1e9}%.1f s " +
-            f"sessions=$sessions sess_t=${(System.nanoTime() - t2) / 1e9}%.1f s"
+          f"SCALE mode=transskew mult=$mult events=$total steps=$steps trans_t=$tTrans%.1f s " +
+            f"asof_matched=$matched asof_t=$tAsof%.1f s " +
+            f"sessions=$sessions sess_t=$tSess%.1f s"
         )
       case "media" =>
         // MB-scale payload probe for the chunked BMP/WAV decoders: 8
@@ -1027,24 +896,14 @@ object ScaleProbe {
           .persist()
         val bmpBytes = bmp.agg(sum(length(col("payload")))).collect()(0).getLong(0)
         val wavBytes = wav.agg(sum(length(col("payload")))).collect()(0).getLong(0)
-        val t0 = System.nanoTime()
-        val px = operators.Multimodal
-          .bmpPixelStats(bmp)
-          .agg(sum("n_pixels"))
-          .collect()(0)
-          .getLong(0)
-        val t1 = System.nanoTime()
-        val sm = operators.Multimodal
-          .wavSampleStats(wav)
-          .agg(sum("n_samples"))
-          .collect()(0)
-          .getLong(0)
+        val (px, tBmp) =
+          timed(operators.Multimodal.bmpPixelStats(bmp).agg(sum("n_pixels")).collect()(0).getLong(0))
+        val (sm, tWav) =
+          timed(operators.Multimodal.wavSampleStats(wav).agg(sum("n_samples")).collect()(0).getLong(0))
         println(
-          f"SCALE mode=media mult=$mult bmp_mb=${bmpBytes / 1048576.0}%.1f pixels=$px bmp_t=${(t1 - t0) / 1e9}%.1f s " +
-            f"wav_mb=${wavBytes / 1048576.0}%.1f samples=$sm wav_t=${(System.nanoTime() - t1) / 1e9}%.1f s"
+          f"SCALE mode=media mult=$mult bmp_mb=${bmpBytes / 1048576.0}%.1f pixels=$px bmp_t=$tBmp%.1f s " +
+            f"wav_mb=${wavBytes / 1048576.0}%.1f samples=$sm wav_t=$tWav%.1f s"
         )
-        bmp.unpersist(false)
-        wav.unpersist(false)
       case "png" =>
         // MB-scale probe for the DEFLATE codec tier: 8 PNGs of
         // (256·mult)² RGB pixels, real Deflater streams with filter
@@ -1054,61 +913,27 @@ object ScaleProbe {
         // while SCALE-MEM stays flat. Synthesis (also per-partition
         // JVM work) is timed separately so encode cost never pollutes
         // the decode measurement.
-        import spark.implicits._
-        val t0 = System.nanoTime()
-        val png = spark
-          .range(1, 9)
-          .select((col("id") + 100L).as("media_id"))
-          .as[Long]
-          .mapPartitions(_.map { id =>
-            operators.DeflateMedia.MediaRow(
-              id,
-              operators.DeflateMedia.encodePng(id, 256 * mult, 256 * mult)
-            )
-          })
-          .persist()
-        val pngBytes = png.agg(sum(length(col("payload")))).collect()(0).getLong(0)
-        val t1 = System.nanoTime()
-        val decoded = operators.DeflateMedia
-          .pngPixelStats(png)
-          .agg(sum("n_pixels"), sum("filter_mask"))
-          .collect()(0)
-        println(
-          f"SCALE mode=png mult=$mult png_mb=${pngBytes / 1048576.0}%.1f " +
-            f"encode_t=${(t1 - t0) / 1e9}%.1f s pixels=${decoded.getLong(0)} " +
-            f"masksum=${decoded.getLong(1)} decode_t=${(System.nanoTime() - t1) / 1e9}%.1f s"
+        val (png, mb, tEncode) = encodedImages(operators.DeflateMedia.encodePng(_, _, _))
+        val (decoded, tDecode) = timed(
+          operators.DeflateMedia.pngPixelStats(png).agg(sum("n_pixels"), sum("filter_mask")).collect()(0)
         )
-        png.unpersist(false)
+        println(
+          f"SCALE mode=png mult=$mult png_mb=$mb%.1f " +
+            f"encode_t=$tEncode%.1f s pixels=${decoded.getLong(0)} " +
+            f"masksum=${decoded.getLong(1)} decode_t=$tDecode%.1f s"
+        )
       case "gif" =>
         // LZW-decode probe: 8 GIFs of (256·mult)² pixels. The decoder
         // claims O(dictionary) = 4096 entries of transient state
         // regardless of image size (pixels stream through the palette
         // into sums, never stored) — time linear, SCALE-MEM flat.
-        import spark.implicits._
-        val t0 = System.nanoTime()
-        val gif = spark
-          .range(1, 9)
-          .select((col("id") + 100L).as("media_id"))
-          .as[Long]
-          .mapPartitions(_.map { id =>
-            operators.DeflateMedia.MediaRow(
-              id,
-              operators.GifCodec.encodeGif(id, 256 * mult, 256 * mult)
-            )
-          })
-          .persist()
-        val gifBytes = gif.agg(sum(length(col("payload")))).collect()(0).getLong(0)
-        val t1 = System.nanoTime()
-        val px = operators.GifCodec
-          .gifPixelStats(gif)
-          .agg(sum("n_pixels"))
-          .collect()(0)
-          .getLong(0)
+        val (gif, mb, tEncode) = encodedImages(operators.GifCodec.encodeGif)
+        val (px, tDecode) =
+          timed(operators.GifCodec.gifPixelStats(gif).agg(sum("n_pixels")).collect()(0).getLong(0))
         println(
-          f"SCALE mode=gif mult=$mult gif_mb=${gifBytes / 1048576.0}%.1f " +
-            f"encode_t=${(t1 - t0) / 1e9}%.1f s pixels=$px decode_t=${(System.nanoTime() - t1) / 1e9}%.1f s"
+          f"SCALE mode=gif mult=$mult gif_mb=$mb%.1f " +
+            f"encode_t=$tEncode%.1f s pixels=$px decode_t=$tDecode%.1f s"
         )
-        gif.unpersist(false)
       case "backoff" =>
         // Stupid-Backoff n-gram probe: the documents corpus replicated
         // mult× (ids remapped so the 90/10 train/eval split holds).
@@ -1116,22 +941,17 @@ object ScaleProbe {
         // scoring side five vocab-keyed equi-joins — time must grow
         // linearly in mult with flat task memory (the tables themselves
         // grow sub-linearly: replicated text adds counts, not keys).
-        import spark.implicits._
         val base = Tables.documents(spark, sfDir).select("doc_id", "text")
-        val big = (0 until mult)
-          .map { i =>
-            if (i == 0) base
-            else base.select((col("doc_id") + i * 10000000L).as("doc_id"), col("text"))
-          }
-          .reduce(_ union _)
-        val t0 = System.nanoTime()
-        val r = operators.StupidBackoff
-          .scoresOf(big)
-          .agg(sum("n_trigrams"), sum("n_bi_back"), sum("n_uni_back"))
-          .collect()(0)
+        val big = replicate(base)(i => base.select((col("doc_id") + i * 10000000L).as("doc_id"), col("text")))
+        val (r, t) = timed(
+          operators.StupidBackoff
+            .scoresOf(big)
+            .agg(sum("n_trigrams"), sum("n_bi_back"), sum("n_uni_back"))
+            .collect()(0)
+        )
         println(
           f"SCALE mode=backoff mult=$mult docs=${base.count() * mult} positions=${r.getLong(0)} " +
-            f"bi_back=${r.getLong(1)} uni_back=${r.getLong(2)} time=${(System.nanoTime() - t0) / 1e9}%.1f s"
+            f"bi_back=${r.getLong(1)} uni_back=${r.getLong(2)} time=$t%.1f s"
         )
       case "jpeg" =>
         // Huffman+IDCT probe: 8 JPEGs of (256·mult)² pixels (multiples
@@ -1140,31 +960,13 @@ object ScaleProbe {
         // linearly in pixels while SCALE-MEM stays flat. The direct
         // IDCT is O(64·nonzero) per block, constant per pixel for the
         // fixture's coefficient density.
-        import spark.implicits._
-        val t0 = System.nanoTime()
-        val jpg = spark
-          .range(1, 9)
-          .select((col("id") + 100L).as("media_id"))
-          .as[Long]
-          .mapPartitions(_.map { id =>
-            operators.DeflateMedia.MediaRow(
-              id,
-              operators.JpegCodec.encodeJpeg(id, 256 * mult, 256 * mult)
-            )
-          })
-          .persist()
-        val jpgBytes = jpg.agg(sum(length(col("payload")))).collect()(0).getLong(0)
-        val t1 = System.nanoTime()
-        val px = operators.JpegCodec
-          .jpegPixelStats(jpg)
-          .agg(sum("n_pixels"))
-          .collect()(0)
-          .getLong(0)
+        val (jpg, mb, tEncode) = encodedImages(operators.JpegCodec.encodeJpeg(_, _, _))
+        val (px, tDecode) =
+          timed(operators.JpegCodec.jpegPixelStats(jpg).agg(sum("n_pixels")).collect()(0).getLong(0))
         println(
-          f"SCALE mode=jpeg mult=$mult jpeg_mb=${jpgBytes / 1048576.0}%.1f " +
-            f"encode_t=${(t1 - t0) / 1e9}%.1f s pixels=$px decode_t=${(System.nanoTime() - t1) / 1e9}%.1f s"
+          f"SCALE mode=jpeg mult=$mult jpeg_mb=$mb%.1f " +
+            f"encode_t=$tEncode%.1f s pixels=$px decode_t=$tDecode%.1f s"
         )
-        jpg.unpersist(false)
       case "priority" =>
         // One-group skew for priority sampling: every replicated doc in
         // a single group, k=100. The bit-length histogram cut must keep
@@ -1177,42 +979,21 @@ object ScaleProbe {
             lit("onelang").as("lang"),
             (length(col("text")) % 9999 + 1).cast("long").as("w")
           )
-        val total = docs.count()
-        val t0 = System.nanoTime()
-        val n = operators.PrioritySampling
-          .prioritySample(docs, "lang", "doc_id", "w", 100)
-          .count()
-        println(
-          f"SCALE mode=priority mult=$mult docs=$total selected=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s"
+        timedCount("docs", docs, "selected")(d =>
+          operators.PrioritySampling.prioritySample(d, "lang", "doc_id", "w", 100)
         )
       case _ =>
-        val base = DedupQueries.records(spark, sfDir)
-        // Replicas must be disjoint in ALL dedup keys (title + isbn), not
-        // just ids — otherwise blocks merge across replicas and candidate
-        // pairs grow quadratically in `mult`, measuring block growth
-        // rather than corpus growth. Prefixing the title perturbs its
-        // title_key; clearing the isbn on replicas keeps isbn blocks
-        // constant-size.
-        val big = (0 until mult)
-          .map { i =>
-            if (i == 0) base
-            else
-              base
-                .withColumn("id", concat(lit(s"x$i."), col("id")))
-                .withColumn("title", concat(lit(s"x$i"), col("title")))
-                .withColumn("isbn", lit(""))
-          }
-          .reduce(_ union _)
-        val total = big.count()
-        val t0 = System.nanoTime()
-        val n = Dedup.dedupRecords(big).filter(col("dedup_id").isNotNull).count()
-        println(f"SCALE mode=dedup mult=$mult records=$total clustered=$n time=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        timedCount("records", recordsReplicated, "clustered")(d =>
+          Dedup.dedupRecords(d).filter(col("dedup_id").isNotNull)
+        )
     }
-    // Listener events are delivered async; a short drain keeps the
-    // telemetry line complete without touching private bus APIs.
-    Thread.sleep(500)
+    spark.catalog.clearCache()
+    Lineage.releaseHeld()
+    val all = stages.all
     println(
-      f"SCALE-MEM mode=$mode mult=$mult spill_mem_mb=${spillMem.get / 1048576}%d spill_disk_mb=${spillDisk.get / 1048576}%d peak_task_exec_mb=${peakTaskMem.get / 1048576}%d"
+      f"SCALE-MEM mode=$mode mult=$mult spill_mem_mb=${all.map(_.spillB).sum / 1048576}%d " +
+        f"spill_disk_mb=${all.map(_.diskSpillB).sum / 1048576}%d " +
+        f"peak_task_exec_mb=${all.map(_.peakExecB).foldLeft(0L)(math.max) / 1048576}%d"
     )
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,34 +7,14 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Optional extra args: run only the named queries (local iteration).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries ns timestamps; read as raw longs and let
-      // Tables.events convert (Spark's reader rejects NANOS otherwise).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    SparkEntry.registry
+      .filter(q => only.isEmpty || only(q.name))
+      .foreach { q =>
+        Harness.run(spark, q, sfDir)(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}"))
+          .failed.foreach(e => System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}"))
       }
-      // queries persist intermediates (dedup keys, LSH band tables);
-      // release them so 60 queries don't accumulate cached blocks.
-      // releaseHeld frees checkpoint storage too — clearCache cannot
-      // (it lives outside the CacheManager).
-      spark.catalog.clearCache()
-      graft.Lineage.releaseHeld()
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

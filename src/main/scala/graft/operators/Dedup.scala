@@ -300,10 +300,12 @@ object Dedup {
       .distinct()
 
   /** Connected-component labels by iterative min-label propagation: every
-    * node takes the min label among itself and its neighbors, repeated
-    * `iters` times (converges once `iters` >= component diameter). Each
-    * iteration is one aggregation shuffle — no driver-side graph.
-    * Returns (id, dedup_id) for nodes that appear in an edge.
+    * node takes the min label among itself and its neighbors, for up to
+    * `iters` rounds (a label moves one hop per round, so this converges
+    * once `iters` exceeds the component diameter). Each round is one
+    * aggregation shuffle — no driver-side graph. Returns (id, dedup_id)
+    * for nodes that appear in an edge; throws `IllegalStateException` if
+    * a label still decreased in round `iters`.
     */
   def assignClusters(edges: DataFrame, iters: Int = 10): DataFrame = {
     // Edge sets are tiny relative to the corpus (only blocked+matched
@@ -348,8 +350,8 @@ object Dedup {
         lit(true).as("__decreased")
       )
     var labels = graft.Lineage.checkpoint(labels0, eager = false)
-    var converged = false
-    for (_ <- 1 to iters if !converged) {
+    var nDecreased = -1L
+    for (_ <- 1 to iters if nDecreased != 0) {
       val next0 = sym
         .join(
           labels.df
@@ -365,15 +367,18 @@ object Dedup {
           (col("peer_min") < col("dedup_id")).as("__decreased")
         )
       val next = graft.Lineage.checkpoint(next0, eager = false)
-      val nDecreased = next.df.filter(col("__decreased")).count()
+      nDecreased = next.df.filter(col("__decreased")).count()
       labels.release()
       labels = next
-      converged = nDecreased == 0
     }
     // The returned frame reads the last label checkpoint, so the edge
     // checkpoint can go now; the label checkpoint stays registered until
     // the consumer's Lineage.releaseHeld().
     symCk.release()
+    if (nDecreased != 0)
+      throw new IllegalStateException(
+        s"assignClusters did not converge in $iters rounds: $nDecreased labels still decreasing"
+      )
     labels.df.drop("__decreased")
   }
 

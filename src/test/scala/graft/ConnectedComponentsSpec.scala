@@ -69,6 +69,14 @@ class ConnectedComponentsSpec extends SparkSuite {
     assert(star == prop)
   }
 
+  test("assignClusters fails loudly at its round cap on a 30-node path") {
+    // Labels move one hop per round, so the path's far end needs 29
+    // rounds; returning after the default 10 would mislabel it.
+    val path = (1L until 30L).map(i => (i, i + 1)).toDF("id_1", "id_2")
+    val e = intercept[IllegalStateException](Dedup.assignClusters(path))
+    assert(e.getMessage.contains("did not converge in 10 rounds"), e.getMessage)
+  }
+
   test("chainEdges components match the analytic chain structure") {
     // 0-based keys, matching the testdata p_partkey domain.
     val parts = (0L until 200L).toDF("p_partkey")

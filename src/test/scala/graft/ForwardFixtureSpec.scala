@@ -18,14 +18,7 @@ import scala.jdk.CollectionConverters._
 class ForwardFixtureSpec extends SparkSuite {
 
   test("ForwardTest::testForward1 — toSolrArray on forward1.xml") {
-    val xml = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(
-          "/root/reference/tests/fixtures/Base/record/forward1.xml"
-        )
-      ),
-      "UTF-8"
-    )
+    val xml = ReferenceFixtures.text("Base/record/forward1.xml")
     val rec = ForwardXml.parse(xml)
     val session = spark
     import session.implicits._

@@ -14,13 +14,8 @@ import org.apache.spark.sql.functions.col
   */
 class LidoFixtureSpec extends SparkSuite {
 
-  private val FixDir = "/root/reference/tests/fixtures/Base/record"
-
   private def recordDf(name: String): DataFrame = {
-    val xml = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(FixDir, name)),
-      "UTF-8"
-    )
+    val xml = ReferenceFixtures.text(s"Base/record/$name")
     val rec = LidoXml.parse(xml)
     val session = spark
     import session.implicits._

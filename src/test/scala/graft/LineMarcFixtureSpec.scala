@@ -13,9 +13,6 @@ import scala.xml.XML
   */
 class LineMarcFixtureSpec extends SparkSuite {
 
-  private val fixtureDir =
-    "/root/reference/tests/fixtures/Base/utils/LineBasedMarcFormatter"
-
   private val genieConfig = Seq(
     LineMarc.Format(
       "‡([a-z0-9])",
@@ -28,8 +25,8 @@ class LineMarcFixtureSpec extends SparkSuite {
   )
 
   /** Flatten an expected MARCXML file to the same Field list shape. */
-  private def expectedFields(path: String): Seq[LineMarc.Field] = {
-    val root = XML.loadFile(path)
+  private def expectedFields(name: String): Seq[LineMarc.Field] = {
+    val root = XML.loadFile(ReferenceFixtures.path(fixture(name)).toFile)
     val records = if (root.label == "record") Seq(root) else (root \ "record")
     records.flatMap { rec =>
       val leader = (rec \ "leader").map(l => LineMarc.Field("LDR", "", "", "", l.text))
@@ -51,21 +48,19 @@ class LineMarcFixtureSpec extends SparkSuite {
     }
   }
 
-  private def read(name: String): String = {
-    val src = scala.io.Source.fromFile(s"$fixtureDir/$name", "UTF-8")
-    try src.mkString
-    finally src.close()
-  }
+  private def fixture(name: String): String = s"Base/utils/LineBasedMarcFormatter/$name"
+
+  private def read(name: String): String = ReferenceFixtures.text(fixture(name))
 
   test("Alma fixture (pipe dialect, auto-detected) matches the expected MARCXML") {
     val (fields, bad) = LineMarc.convertConfigured(read("alma.txt"))
-    assert(fields == expectedFields(s"$fixtureDir/alma.xml"))
+    assert(fields == expectedFields("alma.xml"))
     assert(bad == 0)
   }
 
   test("GeniePlus fixture (custom ‡ config) matches the expected MARCXML") {
     val (fields, bad) = LineMarc.convertConfigured(read("genieplus.txt"), genieConfig)
-    assert(fields == expectedFields(s"$fixtureDir/genieplus.xml"))
+    assert(fields == expectedFields("genieplus.xml"))
     assert(bad == 0)
   }
 
@@ -74,7 +69,7 @@ class LineMarcFixtureSpec extends SparkSuite {
     assert(fields.nonEmpty)
     assert(bad == 2, s"illegal-XML-character runs: $bad")
     // the surviving fields still match the reference's cleaned output
-    val expected = expectedFields(s"$fixtureDir/bad.xml")
+    val expected = expectedFields("bad.xml")
     assert(fields.map(_.tag) == expected.map(_.tag))
   }
 }

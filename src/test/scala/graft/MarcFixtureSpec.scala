@@ -15,13 +15,8 @@ import org.apache.spark.sql.functions.col
   */
 class MarcFixtureSpec extends SparkSuite {
 
-  private val FixDir = "/root/reference/tests/fixtures/Base/record"
-
   private def recordDf(name: String): DataFrame = {
-    val xml = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(FixDir, name)),
-      "UTF-8"
-    )
+    val xml = ReferenceFixtures.text(s"Base/record/$name")
     val rec = MarcXmlFull.parseCollection(xml).head
     val session = spark
     import session.implicits._
@@ -39,10 +34,7 @@ class MarcFixtureSpec extends SparkSuite {
     val session = spark
     import session.implicits._
     val recs = fixtures.map { name =>
-      val xml = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(FixDir, name)),
-        "UTF-8"
-      )
+      val xml = ReferenceFixtures.text(s"Base/record/$name")
       (name, MarcXmlFull.parseCollection(xml).head)
     }
     val df = recs.map { case (n, r) => (n, r.leader, r.controls, r.fields) }
@@ -473,14 +465,7 @@ class MarcFixtureSpec extends SparkSuite {
     * constants the fixture pins.
     */
   test("CreatePreviewTest::testCreatePreview — preview_marc.xml end-to-end") {
-    val xml = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(
-          "/root/reference/tests/fixtures/Base/Controller/CreatePreview/preview_marc.xml"
-        )
-      ),
-      "UTF-8"
-    )
+    val xml = ReferenceFixtures.text("Base/Controller/CreatePreview/preview_marc.xml")
     val rec = MarcXmlFull.parseCollection(xml).head
     val session = spark
     import session.implicits._

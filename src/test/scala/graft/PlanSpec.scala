@@ -24,24 +24,32 @@ class PlanSpec extends SparkSuite {
     assert(dupes.isEmpty, s"duplicate registry names: ${dupes.mkString(", ")}")
   }
 
+  /** What the registry-wide tests check, per query, from ONE build of its
+    * plan: building a query runs its eager checkpoints, so each test
+    * building all of them again would triple that cost.
+    */
+  private case class Shape(name: String, cartesian: Boolean, nestedLoop: Boolean, exprNodes: Int)
+
+  private lazy val shapes: Seq[Shape] = SparkEntry.registry.map { q =>
+    try {
+      val qe = q.fn(spark, sf).queryExecution
+      val exec = qe.executedPlan.toString
+      val nodes = qe.optimizedPlan.map(p => p.expressions.map(e => e.collect { case x => x }.size).sum).sum
+      Shape(q.name, exec.contains("CartesianProduct"), exec.contains("BroadcastNestedLoopJoin"), nodes)
+    } finally Lineage.releaseHeld()
+  }
+
   test("no registered query plans a cartesian product") {
-    SparkEntry.registry.foreach { q =>
-      val plan = q.fn(spark, sf).queryExecution.executedPlan.toString
+    shapes.foreach { q =>
       assert(
-        !plan.contains("CartesianProduct"),
+        !q.cartesian,
         s"${q.name} plans a cartesian product"
       )
     }
   }
 
   test("brute-force knn is the only nested-loop join (by design)") {
-    val offenders = SparkEntry.registry.filter { q =>
-      q.fn(spark, sf)
-        .queryExecution
-        .executedPlan
-        .toString
-        .contains("BroadcastNestedLoopJoin")
-    }
+    val offenders = shapes.filter(_.nestedLoop)
     // knn_cosine IS the documented brute-force baseline; the two recall
     // evals compute brute-force ground truth over the deliberately small
     // eval query sample (the corpus side of their approximate paths stays
@@ -84,10 +92,8 @@ class PlanSpec extends SparkSuite {
     // surface — from ~78k nodes to ~30k, so the global cap holds
     // everywhere.
     val limit = 60000
-    SparkEntry.registry.foreach { q =>
-      val plan = q.fn(spark, sf).queryExecution.optimizedPlan
-      val nodes = plan.map(p => p.expressions.map(e => e.collect { case x => x }.size).sum).sum
-      assert(nodes <= limit, s"${q.name} optimized plan has $nodes expression nodes (> $limit)")
+    shapes.foreach { q =>
+      assert(q.exprNodes <= limit, s"${q.name} optimized plan has ${q.exprNodes} expression nodes (> $limit)")
     }
   }
 

@@ -438,7 +438,7 @@ class ReferenceParitySpec extends SparkSuite {
     dbf.setNamespaceAware(true)
     val dom = dbf
       .newDocumentBuilder()
-      .parse(new java.io.File("/root/reference/tests/fixtures/Base/record/qdc1.xml"))
+      .parse(ReferenceFixtures.path("Base/record/qdc1.xml").toFile)
     val kids = dom.getDocumentElement.getChildNodes
     val rows = (0 until kids.getLength).map(kids.item).collect {
       case e: org.w3c.dom.Element =>
@@ -489,7 +489,7 @@ class ReferenceParitySpec extends SparkSuite {
     dbf.setNamespaceAware(true)
     val dom = dbf
       .newDocumentBuilder()
-      .parse(new java.io.File("/root/reference/tests/fixtures/Base/record/lrmi1.xml"))
+      .parse(ReferenceFixtures.path("Base/record/lrmi1.xml").toFile)
     val root = dom.getDocumentElement
     def elems(parent: org.w3c.dom.Element, name: String): Seq[org.w3c.dom.Element] = {
       val kids = parent.getChildNodes
@@ -545,7 +545,7 @@ class ReferenceParitySpec extends SparkSuite {
     dbf.setNamespaceAware(true)
     val dom = dbf
       .newDocumentBuilder()
-      .parse(new java.io.File("/root/reference/tests/fixtures/Base/record/eaccpf1.xml"))
+      .parse(ReferenceFixtures.path("Base/record/eaccpf1.xml").toFile)
     val root = dom.getDocumentElement
     def all(parent: org.w3c.dom.Element, name: String): Seq[org.w3c.dom.Element] = {
       // descendant search in document order, like SimpleXML path walks

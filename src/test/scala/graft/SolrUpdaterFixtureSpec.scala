@@ -16,13 +16,8 @@ import org.apache.spark.sql.functions._
   */
 class SolrUpdaterFixtureSpec extends SparkSuite {
 
-  private val FixDir = "/root/reference/tests/fixtures/Base/record"
-
   private def recDf(name: String): DataFrame = {
-    val xml = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(FixDir, name)),
-      "UTF-8"
-    )
+    val xml = ReferenceFixtures.text(s"Base/record/$name")
     val rec = MarcXmlFull.parseCollection(xml).head
     val session = spark
     import session.implicits._
@@ -180,7 +175,7 @@ class SolrUpdaterFixtureSpec extends SparkSuite {
   test("PreviewCreatorTest::testBuilding — hierarchical building mapping") {
     import graft.operators.FieldMapping
     import org.apache.spark.sql.functions._
-    val df = recDf2("/root/reference/tests/fixtures/Base/Solr/holdings_record.xml")
+    val df = recDf2("Base/Solr/holdings_record.xml")
     val buildingMap = FieldMapping.MapFile(
       "normal",
       Seq("A1" -> Seq("A"), "A2" -> Seq("A"), "B1" -> Seq("B"), "C1" -> Seq("")),
@@ -214,11 +209,8 @@ class SolrUpdaterFixtureSpec extends SparkSuite {
     assert(got == Seq("B", "A/2", "A", "DEF/2"), got)
   }
 
-  private def recDf2(path: String): DataFrame = {
-    val xml = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      "UTF-8"
-    )
+  private def recDf2(fixture: String): DataFrame = {
+    val xml = ReferenceFixtures.text(fixture)
     val rec = MarcXmlFull.parseCollection(xml).head
     val session = spark
     import session.implicits._

@@ -45,4 +45,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("every SparkSession is built by graft.Harness") {
+    // One session factory: a second builder chain drifts from it in cores,
+    // time zone, extensions or parquet settings.
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    val offenders = for {
+      root <- Seq(Paths.get("src/main/scala"), Paths.get("src/test/scala"))
+      f <- scalaFiles(root) if f.getFileName.toString != "Harness.scala"
+      text = Files.readString(f)
+      m <- builder.findAllMatchIn(text)
+    } yield s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
