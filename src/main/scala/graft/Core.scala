@@ -28,7 +28,11 @@ final case class Q(
   * `Dataset.unpersist` and `clearCache` free neither: checkpoint storage
   * lives outside the CacheManager, so this handle is the only release.
   */
-final class Checkpointed private[graft] (val df: DataFrame, rdd: org.apache.spark.rdd.RDD[_]) {
+final class Checkpointed private[graft] (
+    val df: DataFrame,
+    rdd: org.apache.spark.rdd.RDD[_],
+    reliable: Boolean
+) {
   private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Frees the blocks and checkpoint files and unregisters the handle.
@@ -37,7 +41,8 @@ final class Checkpointed private[graft] (val df: DataFrame, rdd: org.apache.spar
   def release(): Unit =
     if (released.compareAndSet(false, true)) {
       Lineage.held.remove(this)
-      rdd.unpersist(blocking = false)
+      if (reliable) rdd.unpersist(blocking = false)
+      else org.apache.spark.GraftListenerBus.unpersistLocalCheckpoint(rdd)
       rdd.getCheckpointFile.foreach { f =>
         val path = new org.apache.hadoop.fs.Path(f)
         path.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(path, true)
@@ -100,7 +105,7 @@ object Lineage {
     // the first action; persisted, that job reads the first one's blocks
     // instead of computing the frame again.
     if (reliable.nonEmpty && !eager) rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val h = new Checkpointed(cp, rdd)
+    val h = new Checkpointed(cp, rdd, reliable.nonEmpty)
     held.add(h)
     h
   }
@@ -145,6 +150,11 @@ object Tables {
     * round-robin repartition, SPARK-23207) and the consumers feed
     * partition-order-independent aggregates; the full oracle sweep
     * certifies output equality.
+    *
+    * Caveat: the probe counts DISTINCT files, since `inputFiles`
+    * de-duplicates paths, so a self-union of one table counts that
+    * table's files once and may fan out an input that already plans at
+    * twice that many partitions.
     */
   def fanOutForCpu(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism

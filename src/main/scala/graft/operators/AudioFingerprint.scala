@@ -267,13 +267,7 @@ object AudioFingerprint {
     // checkpoint once so the sample decode + DFT never replays per
     // branch (released via Lineage.releaseHeld, the nearDupOf
     // convention).
-    val lm = graft.Lineage.checkpoint(landmarks).df
-    val heavy = lm
-      .groupBy("v")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketSize)
-      .select("v")
-    val light = lm.join(broadcast(heavy), Seq("v"), "left_anti")
+    val light = Skew.capHeavy(graft.Lineage.checkpoint(landmarks).df, Seq("v"), MaxBucketSize)
     light
       .select(col("v"), col("media_id").as("media_a"), col("n_windows").as("nw_a"), col("t").as("t_a"))
       .join(
@@ -349,12 +343,7 @@ object AudioFingerprint {
 
   def neardupIndexOf(corpusLandmarks: DataFrame): AudioNeardupIndex = {
     val lm = graft.Lineage.checkpoint(corpusLandmarks).df
-    val heavy = lm
-      .groupBy("v")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketSize)
-      .select("v")
-    AudioNeardupIndex(lm.join(broadcast(heavy), Seq("v"), "left_anti").persist())
+    AudioNeardupIndex(Skew.capHeavy(lm, Seq("v"), MaxBucketSize).persist())
   }
 
   /** Incremental assignment — the daily-delta shape for the audio

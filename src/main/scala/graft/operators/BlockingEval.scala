@@ -36,7 +36,7 @@ object BlockingEval {
     * for specs.
     */
   def evalOf(keyed: DataFrame): DataFrame = {
-    val capped = Dedup.capHeavy(Dedup.explodeBlockKeys(keyed)).persist()
+    val capped = Skew.capHeavy(Dedup.explodeBlockKeys(keyed), Dedup.BlockKeys, Dedup.MaxBlockSize).persist()
 
     // Candidate counts from the bounded (kind, key, source) table.
     val perSrc = capped
@@ -131,7 +131,7 @@ object BlockingEval {
     * boolean agreement flag per field plus the veto-chain match label.
     */
   private def agreementFlags(keyed: DataFrame): DataFrame = {
-    val capped = Dedup.capHeavy(Dedup.explodeBlockKeys(keyed))
+    val capped = Skew.capHeavy(Dedup.explodeBlockKeys(keyed), Dedup.BlockKeys, Dedup.MaxBlockSize)
     Dedup.suffixed(capped, "_1")
       .join(
         Dedup.suffixed(capped, "_2"),

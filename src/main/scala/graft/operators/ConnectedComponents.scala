@@ -84,9 +84,10 @@ object ConnectedComponents {
     * where component_id is the component's minimum node id.
     *
     * `maxRounds` is a safety cap well above the O(log² n) bound for any
-    * realistic graph (2^20-size components converge in ≲ 8 rounds); a
-    * non-converged exit logs rather than throws, matching
-    * assignClusters.
+    * realistic graph (2^20-size components converge in ≲ 8 rounds). If
+    * the checksum still moved in round `maxRounds`, this throws
+    * `IllegalStateException` naming the round count rather than return
+    * partly contracted labels, as [[Dedup.assignClusters]] does.
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
     // Each round references the previous edge set 4+ times (symmetrize,
@@ -133,17 +134,13 @@ object ConnectedComponents {
       prev = chk
     }
     if (!converged)
-      System.err.println(
-        s"[graft] connectedComponents: checksum still moving after $maxRounds rounds; " +
-          "labels below may be partially contracted"
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxRounds rounds: edge checksum still moving"
       )
     // After convergence every edge is (node, component-min) and centers
-    // map to themselves; the min-aggregate is then a no-op. On a
-    // NON-converged exit it is load-bearing: a partially contracted set
-    // can hold edges from one node to two candidate minima, and without
-    // the aggregate the output would break the one-row-per-id contract
-    // downstream left joins rely on (labels would fan out instead of
-    // merely being non-minimal, which is how assignClusters degrades).
+    // map to themselves, and every center also appears as an edge's `b`
+    // — the union emits it once per edge, so the min-aggregate collapses
+    // those copies to the one row per id downstream left joins rely on.
     cur.df
       .select(col("a").as("id"), col("b").as("component_id"))
       .union(cur.df.select(col("b").as("id"), col("b").as("component_id")))

@@ -205,10 +205,10 @@ object Dedup {
     * (kind, key). Same candidate set as two per-key self-joins, one
     * shuffle + one codegen pass instead of two of each. `keyed` should be
     * persisted by the caller — it feeds both join sides and the heavy-key
-    * count of [[capHeavy]].
+    * count of [[Skew.capHeavy]].
     */
   def matchedEdges(keyed: DataFrame): DataFrame =
-    edgesFromExploded(capHeavy(explodeBlockKeys(keyed)))
+    edgesFromExploded(Skew.capHeavy(explodeBlockKeys(keyed), BlockKeys, MaxBlockSize))
 
   /** One row per (record, usable blocking key), tagged with the key kind
     * — the frame both sides of the candidate self-join read. At cluster
@@ -232,29 +232,11 @@ object Dedup {
       .drop("__bk")
   }
 
-  /** An [[explodeBlockKeys]] frame without its heavy blocks — the
-    * reference's candidate cap: a (kind, key) block shared by more than
-    * [[MaxBlockSize]] records (placeholder titles, dummy ISBNs) yields no
-    * candidates at all, which keeps the worst-case fanout quadratic in
-    * MaxBlockSize instead of in the corpus.
-    *
-    * The cap only needs the HEAVY keys, and those are rare by definition
-    * (at most rows/MaxBlockSize of them), so a map-side-combinable count
-    * over the narrow key feeds a broadcast anti-join — never a window
-    * count, which would shuffle and sort every full-width row.
+  /** The columns of an [[explodeBlockKeys]] frame that name its block:
+    * the candidate join key, the [[Skew.capHeavy]] key and the bucketed
+    * layout's bucket key.
     */
-  def capHeavy(exploded: DataFrame): DataFrame = {
-    val heavy = exploded
-      .groupBy(col("__block_kind").as("__heavy_kind"), col("__block_key").as("__heavy_key"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > MaxBlockSize)
-      .drop("__n")
-    exploded.join(
-      broadcast(heavy),
-      col("__block_kind") === col("__heavy_kind") && col("__block_key") === col("__heavy_key"),
-      "left_anti"
-    )
-  }
+  private[graft] val BlockKeys = Seq("__block_kind", "__block_key")
 
   /** The match predicate, optionally behind [[graft.plans.OpaquePredicateExpr]]
     * — a structural optimizer barrier — so Catalyst cannot lift its
@@ -276,7 +258,7 @@ object Dedup {
       )
     else matchPredicate
 
-  /** Candidate edges from a [[capHeavy]]-capped [[explodeBlockKeys]]
+  /** Candidate edges from a [[Skew.capHeavy]]-capped [[explodeBlockKeys]]
     * frame: one (kind, key) self-join, then the match predicate (opaque
     * for a bucketed input, see [[matchFilter]]). It does not cap: an
     * uncapped frame would pair its heavy blocks quadratically, so it is
@@ -395,7 +377,11 @@ object Dedup {
     * `clustered` columns: the record columns plus `dedup_id`.
     */
   def dedupIncremental(batch: DataFrame, clustered: DataFrame): DataFrame =
-    matchIncremental(batch, capHeavy(explodeBlockKeys(withKeys(clustered))), opaquePredicate = false)
+    matchIncremental(
+      batch,
+      Skew.capHeavy(explodeBlockKeys(withKeys(clustered)), BlockKeys, MaxBlockSize),
+      opaquePredicate = false
+    )
 
   /** [[dedupIncremental]] over a BUCKETED stored corpus — the production
     * daily-delta shape at 100 TB: the clustered corpus's capped,
@@ -457,7 +443,7 @@ object Dedup {
     batch.select("id").join(matched, Seq("id"), "left")
   }
 
-  /** Write `exploded`, capped by [[capHeavy]], as the bucketed layout
+  /** Write `exploded`, capped by [[Skew.capHeavy]], as the bucketed layout
     * `table` at `path` unless the catalog already holds `table` (or
     * `refresh` drops it first). Bucketed by (kind, key) at the session's
     * `spark.sql.shuffle.partitions`. For the incremental probe that is
@@ -477,8 +463,8 @@ object Dedup {
     if (refresh) spark.sql(s"DROP TABLE IF EXISTS $table")
     if (!spark.catalog.tableExists(table))
       graft.sources.Bucketing.writeBucketed(
-        capHeavy(exploded),
-        Seq("__block_kind", "__block_key"),
+        Skew.capHeavy(exploded, BlockKeys, MaxBlockSize),
+        BlockKeys,
         spark.conf.get("spark.sql.shuffle.partitions").toInt,
         table,
         path
@@ -560,7 +546,7 @@ object Dedup {
   /** [[dedupRecords]] over a BUCKETED stored layout — the write-once /
     * join-forever shape for the dominant query at 100 TB. The exploded
     * blocking-key frame, with its heavy blocks already removed by
-    * [[capHeavy]], is written once, bucketed (and sorted) by
+    * [[Skew.capHeavy]], is written once, bucketed (and sorted) by
     * (`__block_kind`, `__block_key`) at the session's
     * `spark.sql.shuffle.partitions`; every subsequent run reads the
     * bucketed table and the candidate self-join consumes the stored hash

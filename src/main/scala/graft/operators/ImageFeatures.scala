@@ -278,15 +278,7 @@ object ImageFeatures {
     // via Lineage.releaseHeld() after its action (Verify/Bench do).
     val hs = graft.Lineage.checkpoint(hashes).df
     release.foreach(_.unpersist())
-    val banded = hashBands(hs)
-    // Heavy-bucket cap through the minhashPairsOf idiom (bounded census
-    // + broadcast anti-join — never a bucket-keyed window).
-    val heavy = banded
-      .groupBy("b", "v")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketSize)
-      .select("b", "v")
-    val light = banded.join(broadcast(heavy), Seq("b", "v"), "left_anti")
+    val light = Skew.capHeavy(hashBands(hs), Seq("b", "v"), MaxBucketSize)
     val a = light.select(
       col("b"),
       col("v"),
@@ -348,17 +340,11 @@ object ImageFeatures {
   def nearDupIncrementalOf(batchHashes: DataFrame, corpusHashes: DataFrame): DataFrame = {
     val bh = graft.Lineage.checkpoint(batchHashes).df
     val ch = graft.Lineage.checkpoint(corpusHashes).df
-    val corpusBands = hashBands(ch)
-    val heavy = corpusBands
-      .groupBy("b", "v")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketSize)
-      .select("b", "v")
     val matched = hashBands(bh)
       .select(col("b"), col("v"), col("media_id").as("media_id"), col("hash_hi").as("bhi"), col("hash_lo").as("blo"))
       .join(
-        corpusBands
-          .join(broadcast(heavy), Seq("b", "v"), "left_anti")
+        Skew
+          .capHeavy(hashBands(ch), Seq("b", "v"), MaxBucketSize)
           .select(col("b"), col("v"), col("media_id").as("c_media"), col("hash_hi").as("chi"), col("hash_lo").as("clo")),
         Seq("b", "v")
       )

@@ -190,8 +190,9 @@ object LlmQueries {
     * members; `rep` is the bucket's min doc_id (the star-edge hub for
     * clustering). Heavy buckets are rare by definition (at most
     * corpus/cap of them), so the map-side-combinable groupBy on the
-    * narrow key produces a broadcastable frame — the same shape as
-    * [[Dedup.capHeavy]].
+    * narrow key produces a broadcastable frame. Only callers that need
+    * the heavy buckets themselves use it (star edges, the diagnostic);
+    * a plain cap is [[Skew.capHeavy]].
     */
   def heavyBandBuckets(bandTable: DataFrame, cap: Int): DataFrame =
     bandTable
@@ -231,12 +232,7 @@ object LlmQueries {
         .select(col("doc_id"), explode(lshProbeBands(col("sig"), Bands, Rows)).as("e"))
         .select(col("doc_id"), col("e.band_id"), col("e.drop_pos"), col("e.p_hash"))
     ).df
-    val heavy = pt
-      .groupBy("band_id", "drop_pos", "p_hash")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucketSize)
-      .select("band_id", "drop_pos", "p_hash")
-    val capped = pt.join(broadcast(heavy), Seq("band_id", "drop_pos", "p_hash"), "left_anti")
+    val capped = Skew.capHeavy(pt, Seq("band_id", "drop_pos", "p_hash"), maxBucketSize)
     val b1 = capped.select(col("doc_id").as("doc_a"), col("band_id"), col("drop_pos"), col("p_hash"))
     val b2 = capped.select(col("doc_id").as("doc_b"), col("band_id"), col("drop_pos"), col("p_hash"))
     b1.join(b2, Seq("band_id", "drop_pos", "p_hash"))
@@ -246,12 +242,7 @@ object LlmQueries {
   }
 
   def minhashPairsOf(docs: DataFrame, maxBucketSize: Int = MaxBucketSize): DataFrame = {
-    val bandTable = bandTableOf(docs)
-    val capped = bandTable.join(
-      broadcast(heavyBandBuckets(bandTable, maxBucketSize).select("band_id", "band_hash")),
-      Seq("band_id", "band_hash"),
-      "left_anti"
-    )
+    val capped = Skew.capHeavy(bandTableOf(docs), Seq("band_id", "band_hash"), maxBucketSize)
     val b1 = capped.select(col("doc_id").as("doc_a"), col("band_id"), col("band_hash"))
     val b2 = capped.select(col("doc_id").as("doc_b"), col("band_id"), col("band_hash"))
     b1.join(b2, Seq("band_id", "band_hash"))

@@ -61,12 +61,7 @@ object LlmQueries3 {
         // making the self-join quadratic in copy count. Capped via
         // broadcast anti-join; never fires on the test corpus, so the
         // oracle is unchanged.
-        val heavy = segs
-          .groupBy("combo", "seg")
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > LlmQueries.MaxBucketSize)
-          .drop("__n")
-        val capped = segs.join(broadcast(heavy), Seq("combo", "seg"), "left_anti")
+        val capped = Skew.capHeavy(segs, Seq("combo", "seg"), LlmQueries.MaxBucketSize)
         val a = capped.select(col("doc_id").as("doc_a"), col("bits").as("bits_a"), col("combo"), col("seg"))
         val b = capped.select(col("doc_id").as("doc_b"), col("bits").as("bits_b"), col("combo"), col("seg"))
         // Hamming via integer XOR popcount over two 32-bit halves —

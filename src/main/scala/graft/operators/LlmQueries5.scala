@@ -29,12 +29,7 @@ object LlmQueries5 {
     val corpus = corpus0
       .withColumn("cell", LlmQueries2.ivfCell(col("vec"), 8))
       .persist()
-    val heavy = corpus
-      .groupBy("cell")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > LlmQueries.MaxBucketSize)
-      .drop("__n")
-    val capped = corpus.join(broadcast(heavy), Seq("cell"), "left_anti")
+    val capped = Skew.capHeavy(corpus, Seq("cell"), LlmQueries.MaxBucketSize)
     val a = capped.select(col("cell"), col("vec_id").as("id_a"), col("vec").as("vec_a"))
     val b = capped.select(col("cell"), col("vec_id").as("id_b"), col("vec").as("vec_b"))
     val dups = a
@@ -84,12 +79,7 @@ object LlmQueries5 {
         // The ORACLE mirrors the cap (the sf1-equivalent sweep caught
         // embed_semdedup diverging when 10× replicas pushed every IVF
         // cell past the cap — the capped semantics ARE the contract).
-        val heavy = corpus
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > LlmQueries.MaxBucketSize)
-          .drop("__n")
-        val capped = corpus.join(broadcast(heavy), Seq("bucket"), "left_anti")
+        val capped = Skew.capHeavy(corpus, Seq("bucket"), LlmQueries.MaxBucketSize)
         val a = capped.select(
           col("bucket"),
           col("vec_id").as("id_a"),

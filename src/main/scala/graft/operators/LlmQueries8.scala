@@ -278,6 +278,12 @@ object LlmQueries8 {
     )
   }
 
+  /** Bucket count of [[neardupClustersBucketed]]'s band layout. Fixed,
+    * unlike the Dedup layouts, which bucket at the session's shuffle
+    * partitions (ROADMAP carries the A/B that would move it).
+    */
+  private val BandLayoutBuckets = 32
+
   /** [[neardupClusters]] over a BUCKETED stored band table — the
     * write-once / join-forever shape for the document family's dominant
     * recurring cost at 100 TB ([[Dedup.dedupRecordsBucketed]]'s
@@ -301,7 +307,6 @@ object LlmQueries8 {
       minJaccard: Double,
       table: String,
       path: String,
-      nBuckets: Int = 32,
       maxBucketSize: Int = LlmQueries.MaxBucketSize,
       refresh: Boolean = false
   ): DataFrame = {
@@ -311,7 +316,7 @@ object LlmQueries8 {
       graft.sources.Bucketing.writeBucketed(
         LlmQueries.bandTableOf(docs, persist = false),
         Seq("band_id", "band_hash"),
-        nBuckets,
+        BandLayoutBuckets,
         table,
         path
       )
@@ -393,13 +398,8 @@ object LlmQueries8 {
       maxBucketSize: Int = LlmQueries.MaxBucketSize
   ): NeardupIndex = {
     val corpusBands = LlmQueries.bandTableOf(corpus.select("doc_id", "text"))
-    val heavy = LlmQueries.heavyBandBuckets(corpusBands, maxBucketSize)
-    val cappedCorpus = corpusBands
-      .join(
-        broadcast(heavy.select("band_id", "band_hash")),
-        Seq("band_id", "band_hash"),
-        "left_anti"
-      )
+    val cappedCorpus = Skew
+      .capHeavy(corpusBands, Seq("band_id", "band_hash"), maxBucketSize)
       .select(col("doc_id").as("c_doc_id"), col("band_id"), col("band_hash"))
       .persist()
     val corpusSets = corpus

@@ -359,12 +359,7 @@ object VideoShots {
         )
       ).as("band")
     ).select(col("media_id"), col("band.b").as("b"), col("band.v").as("v"))
-    val heavy = bands
-      .groupBy("b", "v")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketSize)
-      .select("b", "v")
-    val light = bands.join(broadcast(heavy), Seq("b", "v"), "left_anti")
+    val light = Skew.capHeavy(bands, Seq("b", "v"), MaxBucketSize)
     val cand = light
       .select(col("b"), col("v"), col("media_id").as("media_a"))
       .join(light.select(col("b"), col("v"), col("media_id").as("media_b")), Seq("b", "v"))
@@ -409,12 +404,7 @@ object VideoShots {
   def shotOverlapOf(shots: DataFrame): DataFrame = {
     val st = graft.Lineage.checkpoint(shots).df
     val hs = st.select(col("media_id"), col("n_shots"), col("shot_hash")).distinct()
-    val heavy = hs
-      .groupBy("shot_hash")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketSize)
-      .select("shot_hash")
-    val light = hs.join(broadcast(heavy), Seq("shot_hash"), "left_anti")
+    val light = Skew.capHeavy(hs, Seq("shot_hash"), MaxBucketSize)
     light
       .select(col("shot_hash"), col("media_id").as("media_a"), col("n_shots").as("n_shots_a"))
       .join(
@@ -472,14 +462,8 @@ object VideoShots {
 
   def neardupIndexOf(corpusShots: DataFrame): VideoNeardupIndex = {
     val cs = graft.Lineage.checkpoint(corpusShots).df
-    val corpusBands = bandsOf(cs)
-    val heavy = corpusBands
-      .groupBy("b", "v")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketSize)
-      .select("b", "v")
-    val capped = corpusBands
-      .join(broadcast(heavy), Seq("b", "v"), "left_anti")
+    val capped = Skew
+      .capHeavy(bandsOf(cs), Seq("b", "v"), MaxBucketSize)
       .select(col("b"), col("v"), col("media_id").as("c_media"))
       .persist()
     VideoNeardupIndex(cs, capped)

@@ -1,12 +1,23 @@
 package org.apache.spark
 
-/** Package-escape helper for the stage listeners (graft.Harness.stages,
-  * the benchmark's tracer): the listener bus is `private[spark]`, and
-  * draining it is the only way to read complete per-stage aggregates for
-  * a short query right after its action returns.
+/** Package-escape helpers for what graft needs from `private[spark]`
+  * members:
+  *  - [[drain]], for the stage listeners (graft.Harness.stages, the
+  *    benchmark's tracer): draining the listener bus is the only way to
+  *    read complete per-stage aggregates for a short query right after
+  *    its action returns;
+  *  - [[unpersistLocalCheckpoint]], for graft.Checkpointed.release.
   */
 object GraftListenerBus {
   def drain(sc: SparkContext): Unit =
     try sc.listenerBus.waitUntilEmpty(10000)
     catch { case _: Throwable => Thread.sleep(300) }
+
+  /** Frees a locally checkpointed RDD's blocks. `RDD.unpersist` does the
+    * same through `SparkContext.unpersistRDD`, but first logs a WARN that
+    * the truncated lineage cannot be recomputed, once per release; a
+    * released checkpoint is never read again, so the warning says nothing.
+    */
+  def unpersistLocalCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

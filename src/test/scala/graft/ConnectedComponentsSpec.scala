@@ -77,6 +77,14 @@ class ConnectedComponentsSpec extends SparkSuite {
     assert(e.getMessage.contains("did not converge in 10 rounds"), e.getMessage)
   }
 
+  test("connectedComponents fails loudly at its round cap on a 16-node path") {
+    // One large-star + small-star round cannot contract a 16-node path,
+    // so its checksum still moves when the cap is reached.
+    val path = (1L until 16L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](ConnectedComponents.connectedComponents(path, maxRounds = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"), e.getMessage)
+  }
+
   test("chainEdges components match the analytic chain structure") {
     // 0-based keys, matching the testdata p_partkey domain.
     val parts = (0L until 200L).toDF("p_partkey")
