@@ -28,11 +28,7 @@ final case class Q(
   * `Dataset.unpersist` and `clearCache` free neither: checkpoint storage
   * lives outside the CacheManager, so this handle is the only release.
   */
-final class Checkpointed private[graft] (
-    val df: DataFrame,
-    rdd: org.apache.spark.rdd.RDD[_],
-    reliable: Boolean
-) {
+final class Checkpointed private[graft] (val df: DataFrame, rdd: org.apache.spark.rdd.RDD[_]) {
   private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Frees the blocks and checkpoint files and unregisters the handle.
@@ -41,8 +37,7 @@ final class Checkpointed private[graft] (
   def release(): Unit =
     if (released.compareAndSet(false, true)) {
       Lineage.held.remove(this)
-      if (reliable) rdd.unpersist(blocking = false)
-      else org.apache.spark.GraftListenerBus.unpersistLocalCheckpoint(rdd)
+      org.apache.spark.GraftListenerBus.unpersist(rdd)
       rdd.getCheckpointFile.foreach { f =>
         val path = new org.apache.hadoop.fs.Path(f)
         path.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(path, true)
@@ -105,7 +100,7 @@ object Lineage {
     // the first action; persisted, that job reads the first one's blocks
     // instead of computing the frame again.
     if (reliable.nonEmpty && !eager) rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val h = new Checkpointed(cp, rdd, reliable.nonEmpty)
+    val h = new Checkpointed(cp, rdd)
     held.add(h)
     h
   }

@@ -6,18 +6,20 @@ package org.apache.spark
   *    benchmark's tracer): draining the listener bus is the only way to
   *    read complete per-stage aggregates for a short query right after
   *    its action returns;
-  *  - [[unpersistLocalCheckpoint]], for graft.Checkpointed.release.
+  *  - [[unpersist]], for graft.Checkpointed.release.
   */
 object GraftListenerBus {
   def drain(sc: SparkContext): Unit =
     try sc.listenerBus.waitUntilEmpty(10000)
     catch { case _: Throwable => Thread.sleep(300) }
 
-  /** Frees a locally checkpointed RDD's blocks. `RDD.unpersist` does the
-    * same through `SparkContext.unpersistRDD`, but first logs a WARN that
-    * the truncated lineage cannot be recomputed, once per release; a
-    * released checkpoint is never read again, so the warning says nothing.
+  /** Frees a checkpointed RDD's blocks, local or reliable. `RDD.unpersist`
+    * calls the same `SparkContext.unpersistRDD`, but for a local
+    * checkpoint first logs a WARN that the truncated lineage cannot be
+    * recomputed, once per release; a released checkpoint is never
+    * executed again, so neither that warning nor the storage-level reset
+    * `RDD.unpersist` adds does anything.
     */
-  def unpersistLocalCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }
