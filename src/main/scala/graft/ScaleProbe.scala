@@ -151,28 +151,6 @@ object ScaleProbe {
         timedCount("docs", docsReplicated, "common_docs")(d =>
           LlmQueries6.segmentStatsOf(d).filter(col("n_common") > 0)
         )
-      case "cc" =>
-        // Star-contraction connected components over a synthesized
-        // permuted-chain graph of mult×100k nodes in 64-node chains
-        // (diameter 63 — the regime min-label propagation cannot touch).
-        // Round count is log-bounded and INDEPENDENT of n, per-round
-        // work is one min-aggregate + one equi-join over the edge set,
-        // so time must track n·rounds ≈ linearly; memory is the
-        // per-round checkpointed edge set only.
-        val n = mult * 100000L
-        val edges = operators.ConnectedComponents.chainEdges(
-          spark.range(n).select(col("id").as("p_partkey")),
-          chainLen = 64
-        )
-        val ((comps, total), t) = timed {
-          val labeled = operators.ConnectedComponents.connectedComponents(edges)
-          (labeled.select("component_id").distinct().count(), labeled.count())
-        }
-        // 64-node chains over n nodes → ceil(n/64) components (the tail
-        // chain counts); a mismatch means contraction merged or split
-        // chains.
-        assert(comps == (n + 63) / 64, s"expected ${(n + 63) / 64} components, got $comps")
-        println(f"SCALE mode=cc mult=$mult nodes=$total components=$comps time=$t%.1f s")
       case "cluster" =>
         timedCount("docs", docsReplicated, "merged")(d =>
           operators.LlmQueries8.neardupClusters(d, 0.8).filter(!col("is_canonical"))

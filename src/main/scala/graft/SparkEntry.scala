@@ -94,7 +94,6 @@ object SparkEntry {
       operators.DimAblation.all ++
       operators.StreamReplayQueries.all ++
       operators.TopK.all ++
-      operators.ConnectedComponents.all ++
       operators.DoReMi.all ++
       operators.SmoothedLm.all ++
       operators.WinnowingQueries.all ++

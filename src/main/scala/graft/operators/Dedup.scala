@@ -282,14 +282,19 @@ object Dedup {
       .distinct()
 
   /** Connected-component labels by iterative min-label propagation: every
-    * node takes the min label among itself and its neighbors, for up to
-    * `iters` rounds (a label moves one hop per round, so this converges
-    * once `iters` exceeds the component diameter). Each round is one
+    * node takes the min label among itself and its neighbors, round after
+    * round until a round lowers no label. A label moves one hop per round,
+    * so a component of diameter d takes d rounds; labels only decrease and
+    * are drawn from the finite set of node ids, so the loop always
+    * terminates and its output is always converged. Each round is one
     * aggregation shuffle — no driver-side graph. Returns (id, dedup_id)
-    * for nodes that appear in an edge; throws `IllegalStateException` if
-    * a label still decreased in round `iters`.
+    * for nodes that appear in an edge (columns id_1, id_2; any orderable
+    * type), dedup_id being the component's minimum id. The one
+    * connected-components kernel: dedup and near-dup graphs converge in
+    * 1-2 rounds, where star contraction (Kiveris et al. 2014) measured
+    * slower; it won only on synthetic long chains (ROADMAP item 3).
     */
-  def assignClusters(edges: DataFrame, iters: Int = 10): DataFrame = {
+  def assignClusters(edges: DataFrame): DataFrame = {
     // Edge sets are tiny relative to the corpus (only blocked+matched
     // pairs) — materialize them ONCE, eagerly, before the propagation
     // loop forks consumers. A lazy persist here was the round-13 perf
@@ -321,8 +326,8 @@ object Dedup {
     // 2^d-node plan whose SQL-event description alone OOMs the driver.
     // A lazy checkpoint truncates the plan to a LogicalRDD per round
     // while the convergence count stays the single materializing action
-    // (the Bpe.train / ConnectedComponents discipline, incl. the
-    // executor-loss caveat documented on graft.Lineage).
+    // (the Bpe.train discipline, incl. the executor-loss caveat
+    // documented on graft.Lineage).
     val labels0 = sym
       .groupBy("id")
       .agg(min(col("peer")).as("min_peer"))
@@ -333,7 +338,7 @@ object Dedup {
       )
     var labels = graft.Lineage.checkpoint(labels0, eager = false)
     var nDecreased = -1L
-    for (_ <- 1 to iters if nDecreased != 0) {
+    while (nDecreased != 0) {
       val next0 = sym
         .join(
           labels.df
@@ -357,10 +362,6 @@ object Dedup {
     // checkpoint can go now; the label checkpoint stays registered until
     // the consumer's Lineage.releaseHeld().
     symCk.release()
-    if (nDecreased != 0)
-      throw new IllegalStateException(
-        s"assignClusters did not converge in $iters rounds: $nDecreased labels still decreasing"
-      )
     labels.df.drop("__decreased")
   }
 
@@ -519,7 +520,6 @@ object Dedup {
     */
   def dedupRecords(
       records: DataFrame,
-      iters: Int = 10,
       folding: Seq[(Char, String)] = Nil
   ): DataFrame = {
     // keyed feeds both join sides (×2 key kinds), the heavy-key counts,
@@ -537,7 +537,7 @@ object Dedup {
     // added exchange + wider stages did not pay for themselves —
     // dedup_records benched 4.3 s without vs 5.2 s with.)
     val keyed = graft.Lineage.checkpoint(withKeys(records, folding)).df
-    val clusters = assignClusters(matchedEdges(keyed), iters)
+    val clusters = assignClusters(matchedEdges(keyed))
     keyed
       .select("id")
       .join(clusters, Seq("id"), "left")
@@ -572,14 +572,13 @@ object Dedup {
       records: DataFrame,
       table: String,
       path: String,
-      iters: Int = 10,
       folding: Seq[(Char, String)] = Nil,
       refresh: Boolean = false
   ): DataFrame = {
     val spark = records.sparkSession
     writeLayoutUnlessPresent(spark, table, path, refresh)(explodeBlockKeys(withKeys(records, folding)))
     val exploded = graft.sources.Bucketing.readBucketed(spark, table)
-    val clusters = assignClusters(edgesFromExploded(exploded, opaquePredicate = true), iters)
+    val clusters = assignClusters(edgesFromExploded(exploded, opaquePredicate = true))
     records
       .select("id")
       .join(clusters, Seq("id"), "left")

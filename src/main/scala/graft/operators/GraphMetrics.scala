@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * engines run the same R rounds, so outputs agree even on a
   * pathological chain that hasn't converged): each round is one
   * semi-join + one degree aggregate — the iterative-graph shape of
-  * [[ConnectedComponents]], with per-round lazy checkpoints keeping
+  * [[Dedup.assignClusters]], with per-round lazy checkpoints keeping
   * the plan flat.
   */
 object GraphMetrics {

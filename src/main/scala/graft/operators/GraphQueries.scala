@@ -4,9 +4,10 @@ import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Iterative graph analytics beyond connected components (which the dedup
-  * pipeline already carries): weighted PageRank by fixed-iteration power
-  * method (Page et al. 1999).
+/** Iterative graph analytics: weighted PageRank by fixed-iteration power
+  * method (Page et al. 1999), and connected components of a
+  * permuted-chain graph through the dedup pipeline's kernel
+  * ([[Dedup.assignClusters]]).
   *
   * Determinism discipline: rank mass lives in integer micro-units and
   * every division is integer floor division, so per-node ranks are exact
@@ -104,5 +105,58 @@ object GraphQueries {
     }
   )
 
-  val all: Seq[Q] = Seq(pagerankQ)
+  private val ChainLen = 16
+
+  /** Permuted-chain graph over `parts`: node ids are `perm(k) = k·48271
+    * mod 2147483647` (the MINSTD Lehmer pair — a bijection on
+    * [0, 2³¹−2], so replicated key spaces far beyond the base SF still
+    * permute collision-free), and k links to k+1 except across each
+    * 16-node chain boundary (chain = k/16, 0-based — p_partkey starts at
+    * 0, and the 0-based form keeps the oracle's integer division out of
+    * truncation-vs-floor territory). Chains have diameter 15, so min-label
+    * propagation runs 15 rounds, while the permutation scatters ids so
+    * component minima are not positional. The oracle derives components
+    * from the chain CONSTRUCTION; the Spark side sees only the edge list
+    * (id_1, id_2).
+    */
+  def chainEdges(parts: DataFrame): DataFrame = {
+    val k = col("p_partkey")
+    val perm = (k * 48271L) % 2147483647L
+    val nodes = parts.select(k.as("k"), perm.as("node"))
+    nodes
+      .filter(col("k") % ChainLen =!= (ChainLen - 1))
+      .join(
+        nodes.select((col("k") - 1).as("k"), col("node").as("next_node")),
+        Seq("k")
+      )
+      .select(col("node").as("id_1"), col("next_node").as("id_2"))
+  }
+
+  private val componentsQ = Q(
+    "graph_components_star",
+    (s, d) => {
+      val parts = Tables.part(s, d)
+      val nodes = parts.select(((col("p_partkey") * 48271L) % 2147483647L).as("id"))
+      val labels = Dedup.assignClusters(chainEdges(parts))
+      // Isolated nodes (a tail chain of length 1) are their own
+      // component; the general contract covers them even when the
+      // current SFs have none.
+      nodes
+        .join(labels, Seq("id"), "left")
+        .select(
+          col("id"),
+          coalesce(col("dedup_id"), col("id")).as("component_id")
+        )
+    },
+    Some(
+      s"""WITH n AS (
+        |  SELECT p_partkey AS k, (p_partkey * 48271) % 2147483647 AS node FROM part),
+        |c AS (
+        |  SELECT k // $ChainLen AS chain, min(node) AS m FROM n GROUP BY 1)
+        |SELECT cast(node as bigint) AS id, cast(m as bigint) AS component_id
+        |FROM n JOIN c ON n.k // $ChainLen = c.chain""".stripMargin
+    )
+  )
+
+  val all: Seq[Q] = Seq(pagerankQ, componentsQ)
 }

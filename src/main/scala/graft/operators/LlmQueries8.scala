@@ -241,9 +241,13 @@ object LlmQueries8 {
     lightPairs.union(starEdges)
   }
 
-  /** Every-document labeling from a (id, component_id) assignment over
-    * the matched subset: singletons become their own cluster. */
-  private def labelAllDocs(docs: DataFrame, labels: DataFrame): DataFrame =
+  /** Every-document labeling from verified (doc_a, doc_b) edges: the
+    * components of the matched subset ([[Dedup.assignClusters]]), and
+    * singletons as their own cluster. */
+  private def labelAllDocs(docs: DataFrame, edges: DataFrame): DataFrame = {
+    val labels = Dedup
+      .assignClusters(edges.select(col("doc_a").as("id_1"), col("doc_b").as("id_2")))
+      .select(col("id").as("doc_id"), col("dedup_id").as("cluster_id"))
     docs
       .select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
@@ -252,6 +256,7 @@ object LlmQueries8 {
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
         (coalesce(col("cluster_id"), col("doc_id")) === col("doc_id")).as("is_canonical")
       )
+  }
 
   /** Near-duplicate CLUSTERS: the composition the per-pair operators
     * build toward — [[verifiedNeardupEdges]], then connected components
@@ -268,15 +273,8 @@ object LlmQueries8 {
       docs: DataFrame,
       minJaccard: Double,
       maxBucketSize: Int = LlmQueries.MaxBucketSize
-  ): DataFrame = {
-    val edges = verifiedNeardupEdges(docs, minJaccard, maxBucketSize)
-      .select(col("doc_a").as("id_1"), col("doc_b").as("id_2"))
-    val clusters = Dedup.assignClusters(edges)
-    labelAllDocs(
-      docs,
-      clusters.select(col("id").as("doc_id"), col("dedup_id").as("cluster_id"))
-    )
-  }
+  ): DataFrame =
+    labelAllDocs(docs, verifiedNeardupEdges(docs, minJaccard, maxBucketSize))
 
   /** Bucket count of [[neardupClustersBucketed]]'s band layout. Fixed,
     * unlike the Dedup layouts, which bucket at the session's shuffle
@@ -322,39 +320,7 @@ object LlmQueries8 {
       )
     }
     val bands = graft.sources.Bucketing.readBucketed(spark, table)
-    val edges = edgesFromBandTable(bands, wordSetsOf(docs), minJaccard, maxBucketSize)
-      .select(col("doc_a").as("id_1"), col("doc_b").as("id_2"))
-    val clusters = Dedup.assignClusters(edges)
-    labelAllDocs(
-      docs,
-      clusters.select(col("id").as("doc_id"), col("dedup_id").as("cluster_id"))
-    )
-  }
-
-  /** Near-dup clustering through the star-contraction kernel
-    * ([[ConnectedComponents]]) instead of min-label propagation: the
-    * variant to pick when the duplicate graph has LONG CHAINS — a
-    * template page evolving revision by revision links A≈B≈C≈…≈Z where
-    * only adjacent revisions clear the Jaccard bar, and propagation
-    * then costs one shuffle round per hop while star contraction stays
-    * logarithmic. Run at a lower threshold than [[neardupClusters]]'s
-    * bench setting precisely because lower thresholds are what create
-    * those chains. Identical output contract (and, on any given edge
-    * set, identical components — Llm8Spec asserts the two kernels agree
-    * on the corpus).
-    */
-  def neardupComponents(
-      docs: DataFrame,
-      minJaccard: Double,
-      maxBucketSize: Int = LlmQueries.MaxBucketSize
-  ): DataFrame = {
-    val edges = verifiedNeardupEdges(docs, minJaccard, maxBucketSize)
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val comps = ConnectedComponents.connectedComponents(edges)
-    labelAllDocs(
-      docs,
-      comps.select(col("id").as("doc_id"), col("component_id").as("cluster_id"))
-    )
+    labelAllDocs(docs, edgesFromBandTable(bands, wordSetsOf(docs), minJaccard, maxBucketSize))
   }
 
   /** Incremental near-dup assignment — the daily-delta shape for the
@@ -658,12 +624,11 @@ object LlmQueries8 {
       bench2 = true
     ),
     Q(
-      // The SAME transitive-closure oracle certifies the star-contraction
-      // kernel: component semantics are kernel-independent, so one CTE
-      // oracles both; the threshold (0.5) is the chain-forming regime
-      // that motivates the logarithmic-round kernel.
+      // docs_neardup_clusters at the chain-forming threshold 0.5: lower
+      // thresholds link revisions into longer chains, so propagation
+      // runs more rounds; the same transitive-closure oracle certifies it.
       "docs_neardup_components",
-      (s, d) => neardupComponents(LlmQueries.corpus(s, d), 0.5),
+      (s, d) => neardupClusters(LlmQueries.corpus(s, d), 0.5),
       Some(neardupClusterOracle("0.5"))
     ),
     Q(

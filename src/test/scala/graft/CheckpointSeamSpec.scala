@@ -37,7 +37,7 @@ class CheckpointSeamSpec extends SparkSuite {
     ).toDF("id", "source_id", "title", "author", "year", "isbn")
     def run(): Set[(String, String)] = {
       val out = operators.Dedup
-        .dedupRecords(records, iters = 3)
+        .dedupRecords(records)
         .select(col("id"), coalesce(col("dedup_id"), col("id")).as("d"))
         .collect()
         .map(r => (r.getString(0), r.getString(1)))
@@ -86,14 +86,14 @@ class CheckpointSeamSpec extends SparkSuite {
     val vocab = Seq("the" -> 10L, "then" -> 5L, "they" -> 3L, "he" -> 8L)
       .toDF("w", "f")
       .withColumn("syms", transform(sequence(lit(1), length(col("w"))), i => col("w").substr(i, lit(1))))
-    val edges = Seq(("1", "2"), ("2", "3"), ("4", "5")).toDF("a", "b")
+    val edges = Seq(("1", "2"), ("2", "3"), ("4", "5")).toDF("id_1", "id_2")
     val persistedBefore = sc.getPersistentRDDs.keySet
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
-      assert(operators.Dedup.dedupRecords(records, iters = 3).collect().length == 3)
+      assert(operators.Dedup.dedupRecords(records).collect().length == 3)
       assert(operators.Bpe.train(vocab, 3, checkpointEvery = 1).length == 3)
-      assert(operators.ConnectedComponents.connectedComponents(edges).collect().length == 5)
+      assert(operators.Dedup.assignClusters(edges).collect().length == 5)
     } finally {
       spark.conf.unset("spark.graft.checkpointDir")
       Lineage.releaseHeld()

@@ -1,21 +1,20 @@
 package graft
 
-import graft.operators.{ConnectedComponents, Dedup}
-import org.apache.spark.sql.functions._
+import graft.operators.{Dedup, GraphQueries}
 
 class ConnectedComponentsSpec extends SparkSuite {
   import spark.implicits._
 
   private def cc(pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    ConnectedComponents
-      .connectedComponents(pairs.toDF("a", "b"))
+    Dedup
+      .assignClusters(pairs.toDF("id_1", "id_2"))
       .as[(Long, Long)]
       .collect()
       .toMap
 
   test("a long chain contracts to its minimum") {
-    // Diameter 63 — min-label propagation would need 63 rounds; star
-    // contraction stays inside the 20-round cap.
+    // Diameter 63: min-label propagation runs 63 rounds and stops only
+    // when a round lowers no label.
     val chain = (1L until 64L).map(i => (i, i + 1))
     val got = cc(chain)
     assert(got.keySet == (1L to 64L).toSet)
@@ -41,8 +40,8 @@ class ConnectedComponentsSpec extends SparkSuite {
   }
 
   test("string node ids order lexicographically") {
-    val got = ConnectedComponents
-      .connectedComponents(Seq(("b.2", "a.10"), ("a.10", "a.2")).toDF("a", "b"))
+    val got = Dedup
+      .assignClusters(Seq(("b.2", "a.10"), ("a.10", "a.2")).toDF("id_1", "id_2"))
       .as[(String, String)]
       .collect()
       .toMap
@@ -50,46 +49,38 @@ class ConnectedComponentsSpec extends SparkSuite {
     assert(got == Map("a.2" -> "a.10", "b.2" -> "a.10", "a.10" -> "a.10"))
   }
 
-  test("agrees with min-label propagation on a pseudo-random graph") {
+  test("agrees with an in-memory union-find on a pseudo-random graph") {
     // 300 nodes, ~300 deterministic edges: mixed small components.
     val edges = (1 to 300).map { i =>
       val a = (i * 7919) % 211
       val b = (i * 104729) % 211
       (a.toLong, b.toLong)
     }.filter { case (a, b) => a != b }
-    val star = cc(edges)
-    val prop = Dedup
-      .assignClusters(
-        edges.toDF("id_1", "id_2").select(col("id_1"), col("id_2")),
-        iters = 50
-      )
-      .as[(Long, Long)]
-      .collect()
-      .toMap
-    assert(star == prop)
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // Union by min root, so every root is its component's minimum.
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = parent.keys.toSeq.map(n => n -> find(n)).toMap
+    assert(cc(edges) == expected)
   }
 
-  test("assignClusters fails loudly at its round cap on a 30-node path") {
-    // Labels move one hop per round, so the path's far end needs 29
-    // rounds; returning after the default 10 would mislabel it.
-    val path = (1L until 30L).map(i => (i, i + 1)).toDF("id_1", "id_2")
-    val e = intercept[IllegalStateException](Dedup.assignClusters(path))
-    assert(e.getMessage.contains("did not converge in 10 rounds"), e.getMessage)
-  }
-
-  test("connectedComponents fails loudly at its round cap on a 16-node path") {
-    // One large-star + small-star round cannot contract a 16-node path,
-    // so its checksum still moves when the cap is reached.
-    val path = (1L until 16L).map(i => (i, i + 1)).toDF("a", "b")
-    val e = intercept[IllegalStateException](ConnectedComponents.connectedComponents(path, maxRounds = 1))
-    assert(e.getMessage.contains("did not converge in 1 rounds"), e.getMessage)
+  test("a 30-node path gets one label") {
+    // Labels move one hop per round, so the far end needs 29 rounds.
+    val path = (1L until 30L).map(i => (i, i + 1))
+    assert(cc(path) == (1L to 30L).map(_ -> 1L).toMap)
   }
 
   test("chainEdges components match the analytic chain structure") {
     // 0-based keys, matching the testdata p_partkey domain.
     val parts = (0L until 200L).toDF("p_partkey")
-    val labels = ConnectedComponents
-      .connectedComponents(ConnectedComponents.chainEdges(parts))
+    val labels = Dedup
+      .assignClusters(GraphQueries.chainEdges(parts))
       .as[(Long, Long)]
       .collect()
       .toMap

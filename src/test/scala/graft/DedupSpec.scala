@@ -35,7 +35,7 @@ class DedupSpec extends SparkSuite {
       ("b.1", "b", "COMMON TITLE HERE /", "smith john", 1999, "0306406152"),
       ("c.1", "c", "Entirely Different Name", "jones bob", 1980, "0-306-40615-2")
     )
-    val out = Dedup.dedupRecords(records, iters = 3).collect()
+    val out = Dedup.dedupRecords(records).collect()
     val labels = out.map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels("a.1") == "a.1")
     assert(labels("b.1") == "a.1")
@@ -142,12 +142,11 @@ class DedupSpec extends SparkSuite {
       ("a.1", "a", "Tähtien sota", "lucas george", 1977, ""),
       ("b.1", "b", "Tahtien sota", "lucas george", 1977, "")
     )
-    val plain = Dedup.dedupRecords(records, iters = 3).collect()
+    val plain = Dedup.dedupRecords(records).collect()
     assert(plain.forall(_.isNullAt(1)))
     val folded = Dedup
       .dedupRecords(
         records,
-        iters = 3,
         folding = graft.functions.MetadataFunctions.DefaultFoldingTable
       )
       .collect()

@@ -76,37 +76,27 @@ class Llm8Spec extends SparkSuite {
     spark.catalog.clearCache()
   }
 
-  test("star-contraction and propagation kernels agree on the corpus") {
-    val sfDir = "/root/testdata/sf0.001"
-    val docs = graft.operators.LlmQueries.corpus(spark, sfDir)
-    // Components are kernel-independent: same verified edge set → same
-    // (cluster_id = component min) labeling, at both the bench threshold
-    // and the chain-forming one.
-    Seq(0.8, 0.5).foreach { thr =>
-      val prop = LlmQueries8.neardupClusters(docs, thr).collect().toSet
-      val star = LlmQueries8.neardupComponents(docs, thr).collect().toSet
-      assert(prop == star, s"kernels disagree at threshold $thr")
-    }
-    spark.catalog.clearCache()
-  }
-
   test("neardup components cluster a long adjacent-revision chain") {
     import spark.implicits._
-    // Revision chain: doc i and i+1 share 39 of a 41-word union
-    // (Jaccard ≈ 0.95) while doc 1 and doc 12 share 29 of 51 (≈ 0.57,
-    // below the 0.7 bar) — the endpoints connect only through
-    // intermediate revisions, the multi-hop regime the kernel targets.
-    val docs = (1L to 12L).map { i =>
-      val words = (i to i + 39).map(j => s"w$j")
-      (i, words.mkString(" "))
-    }.toDF("doc_id", "text")
-    val out = LlmQueries8
-      .neardupComponents(docs, 0.7)
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    assert(out.values.toSet == Set(1L), s"chain split into ${out.values.toSet}")
-    spark.catalog.clearCache()
+    // Revision chain: doc i is words w_i … w_(i+39), so docs k revisions
+    // apart share 40 − k of a 40 + k word union. At 0.7, doc 1 and doc 12
+    // (29/51 ≈ 0.57) connect only through intermediate revisions; at 0.93
+    // only adjacent revisions match (39/41 ≈ 0.951; two apart 38/42 ≈
+    // 0.905), so 16 revisions form a path of diameter 15.
+    Seq((12L, 0.7), (16L, 0.93)).foreach { case (n, thr) =>
+      val docs = (1L to n).map { i =>
+        val words = (i to i + 39).map(j => s"w$j")
+        (i, words.mkString(" "))
+      }.toDF("doc_id", "text")
+      val out = LlmQueries8
+        .neardupClusters(docs, thr)
+        .collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+        .toMap
+      assert(out.keySet == (1L to n).toSet)
+      assert(out.values.toSet == Set(1L), s"$n-revision chain at $thr split into ${out.values.toSet}")
+      spark.catalog.clearCache()
+    }
   }
 
   test("sequence packing accounts for every token exactly once") {
